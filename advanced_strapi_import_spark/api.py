@@ -12,9 +12,11 @@ table storage:
     POST /import/:ct         -> Engine.import_csv         (§3.1 pipeline)
     POST /export/:ct         -> Engine.export_csv         (L4: 1000 rows)
 
-The import pipeline is ONE lazy plan end to end (csv scan -> validate ->
-FK resolve -> components -> media match -> merge); actions happen only
-at the final write and the counter aggregation.
+An import materializes its prepared batch once (csv scan -> validate ->
+FK resolve -> media match -> components, see :func:`prepare_batch`) as
+an eager local checkpoint, then merges and writes the table in ONE
+observed job: created/updated come from an ``Observation`` on that
+write, so no action re-runs the merge plan to count it.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from advanced_strapi_import_spark.operators import components as C
 from advanced_strapi_import_spark.operators import export as X
@@ -48,6 +50,70 @@ def check_csv_file(path: str) -> None:
         raise ValueError("Please select a valid CSV file")
     if os.path.exists(path) and os.path.getsize(path) > MAX_CSV_BYTES:
         raise ValueError("Maximum file size: 10MB")
+
+
+def prepare_batch(
+    res: V.ValidationResult,
+    ct,
+    registry: Registry,
+    targets: dict[str, DataFrame],
+    *,
+    media: dict[str, DataFrame],
+    match_field: str | None,
+    media_strategy: str,
+) -> DataFrame:
+    """The valid rows of ``res`` made ready to merge: FK resolve ->
+    media match -> single components -> drop the ``__dot__`` columns,
+    materialized by an eager ``localCheckpoint``.
+
+    ``targets`` maps relation target name -> dimension frame, ``media``
+    maps media field -> files frame matched on ``match_field`` with
+    :func:`media.match_media`'s ``media_strategy``.
+
+    The merge reads the batch twice (matched-coalesce join + create
+    anti-join) and the counters ride the same write, so one eager
+    materialization keeps resolve/media from running once per consumer
+    and gives the merge a short lineage to plan against. A local
+    checkpoint is not a cached relation: nothing matches it by plan,
+    and its blocks go when the returned frame is dropped.
+    """
+    df = R.resolve_all_relations(
+        res.valid, ct, registry, targets, mapping=res.mapping, row_key=V.ROW_COL
+    )
+
+    for fld, files in media.items():
+        if fld in df.columns:
+            # a CSV header with the media field's name (e.g. a
+            # round-tripped export) would otherwise collide with
+            # match_media's out_col -> duplicate column at write
+            df = df.drop(fld)
+        df = M.match_media(
+            df, files, match_field, row_key=V.ROW_COL, out_col=fld,
+            strategy=media_strategy,
+        )
+
+    # build component structs from their validated dot columns
+    # (csv-import.js:664-676 componentData): single components only —
+    # repeatable components have no CSV header convention in the
+    # reference either
+    for fld, attr in ct.attributes.items():
+        if attr.type != "component" or attr.repeatable:
+            continue
+        cols = {
+            m.component_field: V.dot_storage_col(m)
+            for m in res.mapping.values()
+            if m.is_component and m.field == fld and m.component_field
+            and V.dot_storage_col(m) in df.columns
+        }
+        if cols:
+            df = C.build_single_component(
+                df, fld, registry.components[attr.component], cols
+            )
+
+    # keep ROW_COL: it is the merge's "last write wins" order for
+    # duplicate upsert keys (reference processes rows sequentially)
+    df = df.drop(*[c for c in df.columns if c.startswith("__dot__")])
+    return df.localCheckpoint(eager=True)
 
 
 @dataclass
@@ -159,7 +225,7 @@ class Engine:
         check_csv_file(path)
         ct = self.registry.get(ct_name)
         res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
-        # four consumers (invalid collect, preview, two counts) would
+        # three consumers (invalid collect, preview, counts) would
         # otherwise each re-run the CSV scan + validation projection
         cached = res.all.persist()
         try:
@@ -167,8 +233,13 @@ class Engine:
                 res.invalid.select(V.ROW_COL, V.ERRORS_COL)
                 .limit(error_cap).collect()
             )
-            total = cached.count()
-            valid_rows = res.valid.count()
+            # one job for both counts; a row is valid iff it has no
+            # errors (validate.validate_df's split)
+            counts = cached.agg(
+                F.count(F.lit(1)).alias("total"),
+                F.count_if(F.size(V.ERRORS_COL) == 0).alias("valid"),
+            ).first()
+            total, valid_rows = counts["total"], counts["valid"]
             return {
                 "errors": res.schema_errors
                 + [e for r in invalid for e in r[V.ERRORS_COL]],
@@ -228,105 +299,56 @@ class Engine:
         check_csv_file(path)
         ct = self.registry.get(ct_name)
         res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
-        # the scan+validate subtree feeds n_invalid, the error collect,
-        # the merge counters AND the table write — cache it once
+        # the scan+validate subtree feeds n_invalid, the error collect
+        # and the batch checkpoint — cache it until the batch is
+        # materialized; the merge and the write read only the checkpoint
         res.all.persist()
         try:
-            return self._import_csv_body(
-                res, ct, ct_name,
-                upsert=upsert, upsert_field=upsert_field,
-                media_match_field=media_match_field, strict=strict,
-                batch_size=batch_size, error_cap=error_cap,
+            n_invalid = res.invalid.count()
+            if res.schema_errors or (strict and n_invalid):
+                capped = (
+                    res.invalid.select(V.ERRORS_COL).limit(error_cap).collect()
+                )
+                return {
+                    "created": 0, "updated": 0,
+                    "errors": res.schema_errors
+                    + [e for r in capped for e in r[V.ERRORS_COL]],
+                    "errorsTruncated": n_invalid > len(capped),
+                }
+            targets = {
+                a.target: self.table(a.target)
+                for a in ct.attributes.values()
+                if a.type == "relation" and a.target and self.has_table(a.target)
+            }
+            media = {
+                fld: files for fld, files in self._media.items()
+                if media_match_field and fld in ct.attributes
+            }
+            batch = prepare_batch(
+                res, ct, self.registry, targets, media=media,
+                match_field=media_match_field, media_strategy="broadcast-theta",
             )
         finally:
             res.all.unpersist()
 
-    def _import_csv_body(
-        self,
-        res: V.ValidationResult,
-        ct,
-        ct_name: str,
-        *,
-        upsert: bool,
-        upsert_field: str,
-        media_match_field: str | None,
-        strict: bool,
-        batch_size: int | None,
-        error_cap: int = 10_000,
-    ) -> dict[str, Any]:
-        n_invalid = res.invalid.count()
-        if res.schema_errors or (strict and n_invalid):
-            capped = (
-                res.invalid.select(V.ERRORS_COL).limit(error_cap).collect()
-            )
-            return {
-                "created": 0, "updated": 0,
-                "errors": res.schema_errors
-                + [e for r in capped for e in r[V.ERRORS_COL]],
-                "errorsTruncated": n_invalid > len(capped),
-            }
-
-        df = res.valid
-        targets = {
-            a.target: self.table(a.target)
-            for a in ct.attributes.values()
-            if a.type == "relation" and a.target and self.has_table(a.target)
-        }
-        df = R.resolve_all_relations(
-            df, ct, self.registry, targets, mapping=res.mapping, row_key=V.ROW_COL
-        )
-
-        for fld, files in self._media.items():
-            if media_match_field and fld in ct.attributes:
-                if fld in df.columns:
-                    # a CSV header with the media field's name (e.g. a
-                    # round-tripped export) would otherwise collide with
-                    # match_media's out_col -> duplicate column at write
-                    df = df.drop(fld)
-                df = M.match_media(
-                    df, files, media_match_field, row_key=V.ROW_COL, out_col=fld
-                )
-
-        # build component structs from their validated dot columns
-        # (csv-import.js:664-676 componentData): single components only —
-        # repeatable components have no CSV header convention in the
-        # reference either
-        for fld, attr in ct.attributes.items():
-            if attr.type != "component" or attr.repeatable:
-                continue
-            cols = {
-                m.component_field: V.dot_storage_col(m)
-                for m in res.mapping.values()
-                if m.is_component and m.field == fld and m.component_field
-                and V.dot_storage_col(m) in df.columns
-            }
-            if cols:
-                df = C.build_single_component(
-                    df, fld, self.registry.components[attr.component], cols
-                )
-
-        # keep ROW_COL through the merge: it is the "last write wins" order
-        # for duplicate upsert keys (reference processes rows sequentially)
-        df = df.drop(*[c for c in df.columns if c.startswith("__dot__")])
-
+        # one observed write: the counters are aggregated by the write
+        # job itself, never by a second execution of the merge plan
+        obs = Observation()
         if upsert and self.has_table(ct_name):
-            result = U.merge(self.table(ct_name), df, upsert_field, order_col=V.ROW_COL)
-            counters = result.counters.collect()[0]
-            self.write_table(ct_name, result.merged, batch_size=batch_size)
-            created, updated = counters["created"], counters["updated"]
+            result = U.merge(self.table(ct_name), batch, upsert_field, order_col=V.ROW_COL)
+            out = result.tagged.observe(obs, *U.counter_columns()).drop(U.OP_COL)
         else:
-            df = df.drop(V.ROW_COL)
-            created = df.count()
-            updated = 0
+            if upsert:  # first upsert into a missing table: one row per key
+                batch = U.dedupe_batch(batch, upsert_field, V.ROW_COL)
+            out = batch.drop(V.ROW_COL).observe(obs, F.count(F.lit(1)).alias("created"))
             if self.has_table(ct_name):
-                self.write_table(
-                    ct_name,
-                    self.table(ct_name).unionByName(df, allowMissingColumns=True),
-                    batch_size=batch_size,
-                )
-            else:
-                self.write_table(ct_name, df, batch_size=batch_size)
-        return {"created": created, "updated": updated, "invalidRows": n_invalid}
+                out = self.table(ct_name).unionByName(out, allowMissingColumns=True)
+        self.write_table(ct_name, out, batch_size=batch_size)
+        counts = {"updated": 0, **obs.get}
+        return {
+            "created": counts["created"], "updated": counts["updated"],
+            "invalidRows": n_invalid,
+        }
 
     def export_csv(
         self,
@@ -397,8 +419,6 @@ class Engine:
         df = df.limit(limit)
         obs = None
         if stats_out is not None:
-            from pyspark.sql import Observation
-
             obs = Observation()
             df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
         X.write_csv(df, out_path)

@@ -13,7 +13,9 @@ On a Delta/Iceberg table this would be ``MERGE INTO``; the engine's
 storage-agnostic fallback is the classic join+union rewrite, which is
 what MERGE compiles to anyway. Counters (created/updated — the
 reference's import result, csv-import.js:364-368) come from the same
-lazy plan, no extra scan of the target.
+lazy plan: every merged row carries an ``OP_COL`` tag (kept / updated /
+created), so a caller can aggregate :func:`counter_columns` over ``tagged``
+either as a query of its own or as an ``Observation`` riding the write.
 
 Scale: the merge shuffles both sides by the key once; with a bucketed
 target the shuffle drops to the batch side only. The batch is typically
@@ -27,11 +29,25 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+#: per-row merge outcome on ``MergeResult.tagged``
+OP_COL = "__merge_op"
+KEPT, UPDATED, CREATED = 0, 1, 2
+
+
+
+def counter_columns() -> tuple:
+    """created / updated counts (A1) as aggregates over ``tagged``; a
+    count() of a when() is 0, not NULL, over zero rows."""
+    return (
+        F.count(F.when(F.col(OP_COL) == CREATED, 1)).alias("created"),
+        F.count(F.when(F.col(OP_COL) == UPDATED, 1)).alias("updated"),
+    )
+
+
 @dataclass
 class MergeResult:
     merged: DataFrame      # post-merge table content
-    created: DataFrame     # rows that were inserted
-    updated: DataFrame     # rows that were overwritten
+    tagged: DataFrame      # merged plus OP_COL per row
     counters: DataFrame    # one row: created / updated counts (A1)
 
 
@@ -74,30 +90,27 @@ def merge(
     t = target.alias("t")
 
     joined = t.join(b, F.col(f"t.{key}") == F.col(f"b.{key}"), "left")
-    merged_existing = joined.select(
+    existing = joined.select(
         *[
             F.coalesce(F.col(f"b.{c}"), F.col(f"t.{c}")).alias(c)
             if c in batch.columns
             else F.col(f"t.{c}").alias(c)
             for c in tcols
         ],
-        F.col(f"b.{key}").isNotNull().alias("__was_updated"),
+        F.when(F.col(f"b.{key}").isNotNull(), F.lit(UPDATED))
+        .otherwise(F.lit(KEPT)).alias(OP_COL),
     )
 
     created = batch.join(target.select(key), key, "left_anti").select(
         *[
             (F.col(c) if c in batch.columns else F.lit(None).cast(dict(target.dtypes)[c])).alias(c)
             for c in tcols
-        ]
+        ],
+        F.lit(CREATED).alias(OP_COL),
     )
-    updated = merged_existing.filter("__was_updated").drop("__was_updated")
-    merged = merged_existing.drop("__was_updated").unionByName(created)
-
-    counters = merged_existing.agg(
-        # sum() over zero rows is NULL — an empty target must still count 0
-        F.coalesce(F.sum(F.col("__was_updated").cast("long")), F.lit(0)).alias("updated")
-    ).crossJoin(created.agg(F.count(F.lit(1)).alias("created"))).select("created", "updated")
-    return MergeResult(merged=merged, created=created, updated=updated, counters=counters)
+    tagged = existing.unionByName(created)
+    counters = tagged.agg(*counter_columns())
+    return MergeResult(merged=tagged.drop(OP_COL), tagged=tagged, counters=counters)
 
 
 # ---------------------------------------------------------------------------

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from advanced_strapi_import_spark.caching import checkpoint_tracked
 from advanced_strapi_import_spark.operators import resolve as R
 from advanced_strapi_import_spark.operators import validate as V
 from advanced_strapi_import_spark.plans.registry import load, query
@@ -274,9 +273,10 @@ def fk_resolve_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _pipeline_batch(spark: SparkSession, sf_dir: str):
     """The validated+resolved+assembled import batch (pre-merge) plus
-    the ValidationResult — shared by the e2e and counters queries."""
-    from advanced_strapi_import_spark.operators import components as CP
-    from advanced_strapi_import_spark.operators import media as M
+    the ValidationResult — shared by the e2e and counters queries. The
+    batch comes from :func:`api.prepare_batch`, the same preparation
+    (and eager checkpoint) ``Engine.import_csv`` runs."""
+    from advanced_strapi_import_spark.api import prepare_batch
 
     src = _dirty_customers(spark, sf_dir)
     c = load(spark, sf_dir, "customer")
@@ -300,27 +300,6 @@ def _pipeline_batch(spark: SparkSession, sf_dir: str):
     res = V.validate_df(
         src, ct, _REG, order_by=[F.col("custkey").cast("long")]
     )
-    df = res.valid
-    df = R.resolve_all_relations(
-        df, ct, _REG, {"nation_dim": _nation_dim(spark, sf_dir)},
-        mapping=res.mapping, row_key=V.ROW_COL,
-    )
-    # single-component build from the validated dot columns — the same
-    # loop Engine._import_csv_body runs (api.py)
-    for fld, attr in ct.attributes.items():
-        if attr.type != "component" or attr.repeatable:
-            continue
-        cols = {
-            m.component_field: V.dot_storage_col(m)
-            for m in res.mapping.values()
-            if m.is_component and m.field == fld and m.component_field
-            and V.dot_storage_col(m) in df.columns
-        }
-        if cols:
-            df = CP.build_single_component(
-                df, fld, _REG.components[attr.component], cols
-            )
-    df = df.drop(*[cn for cn in df.columns if cn.startswith("__dot__")])
     # media: filenames derived from orders prefix-match the customer
     # name (the reference's upload-zip -> import flow)
     o = load(spark, sf_dir, "orders")
@@ -343,23 +322,11 @@ def _pipeline_batch(spark: SparkSession, sf_dir: str):
     # string compares — measured 4x slower here, and it is the variant
     # that would not survive 100x). Semantics gate-proven equal by
     # media_match vs media_match_prefix.
-    df = M.match_media(
-        df, files, "name", row_key=V.ROW_COL, out_col="docs",
-        strategy="prefix-explode",
+    df = prepare_batch(
+        res, ct, _REG, {"nation_dim": _nation_dim(spark, sf_dir)},
+        media={"docs": files}, match_field="name",
+        media_strategy="prefix-explode",
     )
-    # the merge consumes the batch twice (matched-coalesce join + the
-    # create anti-join) — same reason Engine.import_csv persists the
-    # scan+validate subtree (api.py:233). Eager checkpoint_tracked
-    # (r12 history: a raw persist leaked past caching.release_all(),
-    # letting the SECOND pipeline query in a session silently reuse the
-    # first one's materialized batch; and without an eager fill the
-    # merge's two consumers raced an unmaterialized cache through the
-    # whole validate->resolve->media subtree — the kcore race class,
-    # measured exec 11.1 s -> 1.8 s, shuffle 9.9 -> 1.7 MB). The
-    # checkpoint also truncates the batch lineage the merge arms would
-    # otherwise re-analyze per action (counters plan 2,756 -> 397
-    # lines).
-    df = df.transform(checkpoint_tracked)
     return df, res
 
 

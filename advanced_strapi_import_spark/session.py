@@ -106,21 +106,25 @@ def cluster_conf(executors: int = 1000, cores_per_executor: int = 4) -> dict[str
     }
 
 
-# sessions already tuned, by applicationId: the driver contract binds
-# tune() into EVERY query invocation (__spark_entry__.queries), so a
-# 327-query run would otherwise pay 8 py4j conf.set round trips per
-# query for values that were set on the first call and that nothing in
-# the engine changes without restoring (r12 VERDICT task 2 — per-query
-# constant cost). A new session (new applicationId) re-tunes.
-_TUNED: set[str] = set()
+# sessions already tuned: the entry contract (__spark_entry__.queries)
+# binds tune() into EVERY query invocation, so a 327-query run would
+# otherwise pay 8 py4j conf.set round trips per query for values that
+# were set on the first call and that nothing in the engine changes
+# without restoring (r12 VERDICT task 2 — per-query constant cost).
+# Keyed by session identity, not applicationId alone: a newSession()
+# clone shares the applicationId but starts from its own SQL conf, so
+# it must be tuned too. The value pins the JVM session proxy so its
+# id() cannot be reused by another session while the entry lives.
+_TUNED: dict[tuple[int, str], object] = {}
 
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable knobs to an externally provided session
     (the driver hands us its own SparkSession in ``entry``); no-op on
     a session this process already tuned."""
-    app = spark.sparkContext.applicationId
-    if app in _TUNED:
+    jsession = spark._jsparkSession
+    key = (id(jsession), spark.sparkContext.applicationId)
+    if key in _TUNED:
         return spark
     for k, v in [
         ("spark.sql.adaptive.enabled", "true"),
@@ -141,5 +145,5 @@ def tune(spark: SparkSession) -> SparkSession:
             pass  # conf may be fixed at session start; all are safe to skip
     if len(_TUNED) >= 64:
         _TUNED.clear()
-    _TUNED.add(app)
+    _TUNED[key] = jsession
     return spark

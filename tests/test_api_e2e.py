@@ -27,6 +27,13 @@ def _csv(tmp_path, name, text):
     return str(p)
 
 
+_HEADER = "name,country,established,active\n"
+
+
+def _no_cached_relation(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_list_content_types(engine):
     names = {t["uid"] for t in engine.list_content_types()}
     assert "api::company.company" in names
@@ -112,6 +119,7 @@ def test_export_round_trip(engine, spark, tmp_path):
     # and must agree with what actually landed in the file
     stats: dict = {}
     engine.export_csv("company", str(tmp_path / "export2"), stats_out=stats)
+    assert _no_cached_relation(spark)
     n_file = spark.read.option("header", True).csv(
         str(tmp_path / "export2")
     ).count()
@@ -127,6 +135,28 @@ def test_import_strict_aborts_on_invalid(engine, tmp_path):
     assert out["created"] == 0
     assert any("must be a number" in e for e in out["errors"])
     assert not engine.has_table("company")
+
+
+@pytest.mark.parametrize("kwargs", [{}, {"upsert": True, "upsert_field": "name"}],
+                         ids=["append", "upsert"])
+def test_import_strict_abort_leaves_table_unchanged(engine, spark, tmp_path, kwargs):
+    # strict mode returns before any write, also into an existing table
+    import os
+
+    engine.import_csv(_csv(tmp_path, "a.csv", _HEADER + "Acme,India,2000,true\n"),
+                      "company")
+    path = engine._path("company")
+    files = {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+    p = _csv(tmp_path, "b.csv", _HEADER + "Acme,China,2001,true\nNewco,India,bad,true\n")
+    out = engine.import_csv(p, "company", strict=True, **kwargs)
+    assert (out["created"], out["updated"]) == (0, 0)
+    assert any("must be a number" in e for e in out["errors"])
+    assert {f: os.stat(os.path.join(path, f)).st_mtime_ns
+            for f in os.listdir(path)} == files
+    assert [(r["name"], r["established"]) for r in engine.table("company").collect()] == [
+        ("Acme", 2000)
+    ]
+    assert _no_cached_relation(spark)
 
 
 def test_import_strict_abort_unpersists(engine, tmp_path, spark):
@@ -177,25 +207,80 @@ def test_file_constraints_extension_and_size(engine, tmp_path):
         engine.validate_csv(str(big), "company")
 
 
-def test_upsert_duplicate_keys_last_write_wins(engine, tmp_path):
+# (seed file or None, batch file, import kwargs, created, updated,
+#  invalidRows, stored (name, established, country) rows afterwards)
+IMPORT_CASES = {
     # The reference's sequential update-or-create leaves exactly one
     # record per key, last CSV row winning (csv-import.js:362-428); the
     # merge must not fan out on duplicate batch keys or inflate counters.
-    p1 = _csv(tmp_path, "a.csv",
-              "name,country,established,active\nAcme,India,2000,true\n")
-    engine.import_csv(p1, "company")
-    p2 = _csv(tmp_path, "b.csv",
-              "name,country,established,active\n"
-              "Acme,China,2001,false\n"
-              "Acme,USA,2002,true\n"
-              "Newco,India,2020,yes\n")
-    out = engine.import_csv(p2, "company", upsert=True, upsert_field="name")
-    assert out["updated"] == 1 and out["created"] == 1
-    rows = engine.table("company").collect()
-    acmes = [r for r in rows if r["name"] == "Acme"]
-    assert len(acmes) == 1
-    # last CSV row wins
-    assert acmes[0]["established"] == 2002 and acmes[0]["country"] == 4
+    "dup_existing_key": (
+        "Acme,India,2000,true\n",
+        "Acme,China,2001,false\nAcme,USA,2002,true\nNewco,India,2020,yes\n",
+        {"upsert": True, "upsert_field": "name"}, 1, 1, 0,
+        [("Acme", 2002, 4), ("Newco", 2020, 1)],
+    ),
+    # Oldco is not in the batch: kept, neither created nor updated
+    "dup_new_key": (
+        "Acme,India,2000,true\nOldco,USA,1999,true\n",
+        "Newco,India,2019,yes\nAcme,China,2001,false\nNewco,USA,2020,no\n",
+        {"upsert": True, "upsert_field": "name"}, 1, 1, 0,
+        [("Acme", 2001, 3), ("Newco", 2020, 4), ("Oldco", 1999, 4)],
+    ),
+    # an invalid duplicate between two valid ones is skipped, not merged
+    "dup_around_invalid_row": (
+        "Acme,India,2000,true\n",
+        "Acme,China,2001,false\nAcme,USA,bad,true\nAcme,USA,2003,true\n",
+        {"upsert": True, "upsert_field": "name"}, 0, 1, 1,
+        [("Acme", 2003, 4)],
+    ),
+    # first upsert into a missing table: still one row per key
+    "dup_into_new_table": (
+        None,
+        "Acme,China,2001,false\nAcme,USA,2002,true\nNewco,India,2020,yes\n",
+        {"upsert": True, "upsert_field": "name"}, 2, 0, 0,
+        [("Acme", 2002, 4), ("Newco", 2020, 1)],
+    ),
+    # append (no upsert) into an existing table: created == rows added
+    "append_existing_table": (
+        "Acme,India,2000,true\n",
+        "Acme,China,2001,false\nNewco,India,2020,yes\nBad,India,x,true\n",
+        {}, 2, 0, 1,
+        [("Acme", 2000, 1), ("Acme", 2001, 3), ("Newco", 2020, 1)],
+    ),
+}
+
+
+def _run_import_case(engine, spark, tmp_path, case):
+    seed, batch, kwargs, created, updated, invalid, stored = IMPORT_CASES[case]
+    if seed is not None:
+        engine.import_csv(_csv(tmp_path, "seed.csv", _HEADER + seed), "company")
+    before = engine.table("company").count() if seed is not None else 0
+    p = _csv(tmp_path, "batch.csv", _HEADER + batch)
+    assert engine.preview_csv(p, "company")["totalRows"] == batch.count("\n")
+    assert _no_cached_relation(spark)
+    rep = engine.validate_csv(p, "company")
+    assert _no_cached_relation(spark)
+    assert rep["invalidRows"] == invalid
+    assert rep["validRows"] + invalid == rep["totalRows"] == batch.count("\n")
+    out = engine.import_csv(p, "company", **kwargs)
+    assert _no_cached_relation(spark)
+    assert (out["created"], out["updated"], out["invalidRows"]) == (
+        created, updated, invalid
+    )
+    table = engine.table("company")
+    assert not [c for c in table.columns if c.startswith("__")]  # no helper column stored
+    rows = table.collect()
+    assert len(rows) - before == created
+    assert sorted((r["name"], r["established"], r["country"]) for r in rows) == stored
+
+
+def test_upsert_duplicate_keys_last_write_wins(engine, spark, tmp_path):
+    _run_import_case(engine, spark, tmp_path, "dup_existing_key")
+
+
+@pytest.mark.parametrize("case", [c for c in IMPORT_CASES if c != "dup_existing_key"])
+def test_import_counters(engine, spark, tmp_path, case):
+    _run_import_case(engine, spark, tmp_path, case)
 
 
 def test_upsert_into_empty_target_counts_zero_updated(spark, tmp_path):

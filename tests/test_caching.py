@@ -67,9 +67,10 @@ def test_checkpoint_tracked_reliable_switch(spark, tmp_path):
     returns the same rows."""
     import pytest
 
+    sc = spark.sparkContext
+    had_dir = sc.getCheckpointDir()
     spark.conf.set(caching.RELIABLE_CHECKPOINT_CONF, "true")
     try:
-        had_dir = spark.sparkContext.getCheckpointDir()
         if had_dir is None:
             with pytest.raises(ValueError, match="checkpoint"):
                 caching.checkpoint_tracked(spark.range(3))
@@ -88,6 +89,14 @@ def test_checkpoint_tracked_reliable_switch(spark, tmp_path):
     finally:
         spark.conf.set(caching.RELIABLE_CHECKPOINT_CONF, "false")
         caching.release_tracked()
+        # put the previous dir (or none) back verbatim: setCheckpointDir
+        # would nest a fresh subdirectory, and leaving tmp_path set would
+        # send every later reliable checkpoint of the session to a path
+        # pytest deletes
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(had_dir)
+        )
+        assert sc.getCheckpointDir() == had_dir
 
 
 def test_load_events_memo_is_conf_aware(spark):
@@ -113,7 +122,7 @@ def test_load_events_memo_is_conf_aware(spark):
 
 def test_tune_is_memoized_per_session(spark):
     """tune() pays its 8 conf.set py4j round trips once per
-    applicationId — the driver binds it into every query invocation
+    session — the query entry point binds it into every query invocation
     (r13, VERDICT r12 task 2). Semantics pinned here: a repeat call on
     a tuned session is a no-op (it must NOT fight a harness that
     adjusted a conf mid-suite); a fresh memo re-applies."""
@@ -121,7 +130,8 @@ def test_tune_is_memoized_per_session(spark):
 
     S._TUNED.clear()
     S.tune(spark)
-    assert spark.sparkContext.applicationId in S._TUNED
+    app = spark.sparkContext.applicationId
+    assert (id(spark._jsparkSession), app) in S._TUNED
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -132,6 +142,14 @@ def test_tune_is_memoized_per_session(spark):
         S._TUNED.clear()
         S.tune(spark)  # fresh memo: re-applies UTC
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        # a newSession() clone shares the applicationId but not the SQL
+        # conf: the memo must not mistake it for the tuned original
+        clone = spark.newSession()
+        clone.conf.set("spark.sql.session.timeZone", "America/New_York")
+        S.tune(clone)
+        assert clone.sparkContext.applicationId == app
+        assert clone.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert (id(clone._jsparkSession), app) in S._TUNED
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
 
