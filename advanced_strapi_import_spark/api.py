@@ -66,6 +66,11 @@ def prepare_batch(
     media match -> single components -> drop the ``__dot__`` columns,
     materialized by an eager ``localCheckpoint``.
 
+    The FK resolve is one plan for every relation of the batch
+    (:func:`resolve.resolve_all_relations`): one equi-join serves all
+    exact and id arms, one theta join all contains arms, and one
+    ``groupBy(row)`` plus one join write the ids back.
+
     ``targets`` maps relation target name -> dimension frame, ``media``
     maps media field -> files frame matched on ``match_field`` with
     :func:`media.match_media`'s ``media_strategy``.
@@ -415,7 +420,10 @@ class Engine:
                     df = X.flatten_single_component(df, fname)
         df = X.drop_metadata(df)
         if order_by and order_by in df.columns:
-            df = df.orderBy(order_by)
+            # id breaks ties, so a page holds the same rows whatever the
+            # partitioning
+            tie = ["id"] if "id" in df.columns and order_by != "id" else []
+            df = df.orderBy(order_by, *tie)
         df = df.limit(limit)
         obs = None
         if stats_out is not None:

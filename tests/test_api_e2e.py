@@ -5,7 +5,9 @@ validate -> import -> relations resolved -> upsert -> export round-trip.
 
 from __future__ import annotations
 
+import csv
 import glob
+import io
 
 import pytest
 
@@ -484,3 +486,28 @@ def test_validate_mostly_invalid_csv_bounded_driver_collect(engine, tmp_path):
     rep2 = engine.validate_csv(small, "company")
     assert rep2["invalidRows"] == 2 and rep2["errorsTruncated"] is False
     assert len(rep2["errors"]) == 4
+
+
+def test_export_page_ties_break_on_id(engine, spark, tmp_path):
+    """A page of rows tied on ``order_by`` holds the lowest ids, in id
+    order, and its CSV bytes do not depend on the shuffle partitions."""
+    rows = [f"{i},Co{i:02d},{'India' if i % 3 else 'USA'},{2000 + i % 2},true\n"
+            for i in range(40, 0, -1)]
+    engine.import_csv(
+        _csv(tmp_path, "c.csv", "id,name,country,established,active\n" + "".join(rows)),
+        "company",
+    )
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    pages = {}
+    try:
+        for n in (1, 8):
+            spark.conf.set(key, str(n))
+            out = tmp_path / f"page{n}"
+            engine.export_csv("company", str(out), order_by="established", limit=5)
+            pages[n] = b"".join(p.read_bytes() for p in sorted(out.glob("part-*.csv")))
+    finally:
+        spark.conf.set(key, old)
+    assert pages[1] == pages[8]
+    got = [r["id"] for r in csv.DictReader(io.StringIO(pages[1].decode()))]
+    assert got == ["2", "4", "6", "8", "10"]
