@@ -205,9 +205,9 @@ def _resolve_columns(df: DataFrame, rels: list[_Relation], row_key: str) -> Data
             outs.append(F.col(r.field))
     resolved = ids.groupBy(row_key).agg(*aggs).select(row_key, *outs)
 
-    # the column order of resolving one relation after another: a scalar
-    # column stays in place (or is appended), a multi column is appended
-    # after the row key moves to the front
+    # keep the column order stored tables already have (that of resolving
+    # one relation after another): a scalar column stays in place or is
+    # appended, a multi column is appended after the row key moves first
     cols = list(df.columns)
     for r in rels:
         if r.multi:
@@ -216,8 +216,7 @@ def _resolve_columns(df: DataFrame, rels: list[_Relation], row_key: str) -> Data
             cols.append(r.field)
         if r.dot_col in cols:
             cols.remove(r.dot_col)
-    drop = {r.field for r in rels} | {r.dot_col for r in rels if r.dot_col}
-    base = df.drop(*[c for c in df.columns if c in drop])
+    base = df.drop(*[r.field for r in rels], *[r.dot_col for r in rels if r.dot_col])
     return base.join(resolved, row_key, "left").select(*[F.col(f"`{c}`") for c in cols])
 
 
