@@ -7,7 +7,6 @@ table storage:
     GET  /content-types      -> Engine.list_content_types
     POST /preview/:ct        -> Engine.preview_csv        (L2: 10 rows)
     POST /upload/:ct         -> Engine.validate_csv       (L1: 5 rows)
-    POST /upload-zip         -> Engine.ingest_zip
     POST /upload-media-zip   -> Engine.ingest_media_zip
     POST /import/:ct         -> Engine.import_csv         (§3.1 pipeline)
     POST /export/:ct         -> Engine.export_csv         (L4: 1000 rows)
@@ -17,15 +16,23 @@ FK resolve -> media match -> components, see :func:`prepare_batch`) as
 an eager local checkpoint, then merges and writes the table in ONE
 observed job: created/updated come from an ``Observation`` on that
 write, so no action re-runs the merge plan to count it.
+
+Each verb pays schema discovery only when its input changed: the engine
+remembers the schema of every table version it wrote or read and the
+header schema of the last CSV it scanned, and hands them to the reader,
+which then skips its footer or header job.
 """
 
 from __future__ import annotations
 
+import math
 import os
+import shutil
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from advanced_strapi_import_spark.operators import components as C
 from advanced_strapi_import_spark.operators import export as X
@@ -50,6 +57,15 @@ def check_csv_file(path: str) -> None:
         raise ValueError("Please select a valid CSV file")
     if os.path.exists(path) and os.path.getsize(path) > MAX_CSV_BYTES:
         raise ValueError("Maximum file size: 10MB")
+
+
+def _version(path: str) -> tuple[int, int] | None:
+    """``(st_ino, st_mtime_ns)`` of a table directory, None if missing."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_ino, st.st_mtime_ns
 
 
 def prepare_batch(
@@ -127,6 +143,12 @@ class Engine:
     registry: Registry
     storage_root: str
     _media: dict[str, DataFrame] = field(default_factory=dict)
+    # table path -> ((st_ino, st_mtime_ns) of its directory, schema); the
+    # swap-write gives every version a new directory inode
+    _schemas: dict[str, tuple[tuple[int, int], StructType]] = field(default_factory=dict)
+    # ((path, st_ino, st_size, st_mtime_ns), header schema) of the last
+    # CSV scanned: a preview -> validate -> import flow scans one file
+    _csv_header: tuple[tuple, StructType] | None = None
 
     # -- storage ---------------------------------------------------------
     def _path(self, ct_name: str) -> str:
@@ -137,10 +159,22 @@ class Engine:
         parquet (default), orc, or json (JSONL); all three are
         splittable columnar/line formats Spark scans in parallel with
         pushdown (parquet/orc) or schema inference capped by the
-        stored schema (json)."""
-        if fmt == "parquet":
-            return self.spark.read.parquet(self._path(ct_name))
-        return self.spark.read.format(fmt).load(self._path(ct_name))
+        stored schema (json).
+
+        A parquet table whose current version this engine wrote or
+        read before is read with that version's schema, which skips
+        Spark's footer-inference job."""
+        path = self._path(ct_name)
+        if fmt != "parquet":
+            return self.spark.read.format(fmt).load(path)
+        version = _version(path)
+        known = self._schemas.get(path)
+        if known and known[0] == version:
+            return self.spark.read.schema(known[1]).parquet(path)
+        df = self.spark.read.parquet(path)  # a missing table raises here
+        if version is not None:
+            self._schemas[path] = (version, df.schema)
+        return df
 
     def write_table(
         self, ct_name: str, df: DataFrame, *,
@@ -159,14 +193,15 @@ class Engine:
         if batch_size:
             writer = writer.option("maxRecordsPerFile", batch_size)
         if os.path.exists(path):
-            import shutil
-
             tmp = path + ".__tmp__"
             writer.save(tmp)
             shutil.rmtree(path)
             os.rename(tmp, path)
         else:
             writer.save(path)
+        version = _version(path)
+        if fmt == "parquet" and version is not None:
+            self._schemas[path] = (version, df.schema)
 
     def has_table(self, ct_name: str) -> bool:
         return os.path.exists(self._path(ct_name))
@@ -185,8 +220,6 @@ class Engine:
         round-robin repartition (no key, no skew), reusing the atomic
         swap so readers never see a half-compacted table. Returns the
         new file count."""
-        import math
-
         path = self._path(ct_name)
         total = sum(
             os.path.getsize(os.path.join(root, f))
@@ -198,6 +231,23 @@ class Engine:
         self.write_table(ct_name, self.table(ct_name).repartition(n_files))
         return n_files
 
+    def _scan_csv(self, path: str) -> DataFrame:
+        """:func:`csv_scan` of ``path``, handed the header schema of the
+        last CSV scanned when it is the same file, unchanged: Spark then
+        skips its header-inference job and still checks the file's
+        header against the schema (``enforceSchema=False``)."""
+        try:
+            st = os.stat(path)
+        except OSError:
+            return csv_scan(self.spark, path)  # Spark reports the missing path
+        key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+        known = self._csv_header
+        if known is not None and known[0] == key:
+            return csv_scan(self.spark, path, schema=known[1])
+        df = csv_scan(self.spark, path)
+        self._csv_header = (key, df.schema)
+        return df
+
     # -- verbs -----------------------------------------------------------
     def list_content_types(self) -> list[dict[str, str]]:
         """GET /content-types (controllers/csv-import.js:7-20)."""
@@ -207,8 +257,7 @@ class Engine:
         """POST /preview/:ct — headers + 10 rows + schema attribute names
         (controllers/csv-import.js:113-124)."""
         check_csv_file(path)
-        df = csv_scan(self.spark, path)
-        out = preview(df, 10)
+        out = preview(self._scan_csv(path), 10)
         out["attributes"] = list(self.registry.get(ct_name).attributes)
         return out
 
@@ -229,7 +278,7 @@ class Engine:
         :func:`validate.validate_df` for side-table writes)."""
         check_csv_file(path)
         ct = self.registry.get(ct_name)
-        res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
+        res = V.validate_df(self._scan_csv(path), ct, self.registry)
         # three consumers (invalid collect, preview, counts) would
         # otherwise each re-run the CSV scan + validation projection
         cached = res.all.persist()
@@ -257,18 +306,6 @@ class Engine:
             }
         finally:
             cached.unpersist()
-
-    def ingest_zip(self, path: str, media_field: str) -> DataFrame:
-        """POST /upload-zip (S8): flat unzip -> files table."""
-        files = Z.hygiene_filter(Z.zip_entries(self.spark, path, skip_corrupt=True))
-        # corrupt-archive marker rows are a side signal, not media files:
-        # stored they would inflate counts and join as matchable names
-        files = files.filter(F.col("name") != "__CORRUPT__")
-        files = files.dropDuplicates(["name", "entry_path"]).withColumn(
-            "mime", M.mime_type(F.col("name"))
-        )
-        self._media[media_field] = files
-        return files
 
     def ingest_media_zip(self, path: str, ct_name: str, match_field: str) -> DataFrame:
         """POST /upload-media-zip (S9): foldered unzip -> routed files.
@@ -303,7 +340,7 @@ class Engine:
         as :meth:`validate_csv` — see there."""
         check_csv_file(path)
         ct = self.registry.get(ct_name)
-        res = V.validate_df(csv_scan(self.spark, path), ct, self.registry)
+        res = V.validate_df(self._scan_csv(path), ct, self.registry)
         # the scan+validate subtree feeds n_invalid, the error collect
         # and the batch checkpoint — cache it until the batch is
         # materialized; the merge and the write read only the checkpoint
@@ -452,11 +489,9 @@ class Engine:
         spliced into the query text, so a caller-supplied filter value
         cannot change the query's structure (the injection-safe path
         the reference's querystring filters map onto)."""
-        import os as _os
-
-        for name in sorted(_os.listdir(self.storage_root)):
-            p = _os.path.join(self.storage_root, name)
-            if _os.path.isdir(p):
+        for name in sorted(os.listdir(self.storage_root)):
+            p = os.path.join(self.storage_root, name)
+            if os.path.isdir(p):
                 try:
                     self.table(name, fmt=fmt).createOrReplaceTempView(name)
                 except Exception:

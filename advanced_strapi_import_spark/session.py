@@ -73,6 +73,16 @@ def get_spark(app_name: str = "advanced-strapi-import-spark",
         # plans). One class is small; keep them all.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+        # PySpark's origin capture walks the Python stack around every
+        # DataFrame and Column call and adds py4j round trips to each:
+        # building the validate, resolve and merge plans of an import
+        # took 1.4-1.7x as long with it on (4 CPUs). The cost of turning
+        # it off: analysis errors lose the Python call-site context
+        # ("== DataFrame ==" and the line that built the failing
+        # expression). tune() cannot turn it off on a session it is
+        # handed, because PySpark reads the flag once per process, on
+        # first use, and caches it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -11,6 +11,7 @@ happens later in the validation operator, exactly like the reference.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def csv_scan(
@@ -19,10 +20,17 @@ def csv_scan(
     *,
     multi_line: bool = False,
     delimiter: str = ",",
+    schema: StructType | None = None,
 ) -> DataFrame:
-    """All-string, header-driven CSV read (the engine's S1)."""
+    """All-string, header-driven CSV read (the engine's S1).
+
+    ``schema`` is the header schema of an earlier scan of the same file;
+    given it, Spark skips the job that reads the header to infer one.
+    ``enforceSchema=False`` still checks every file's header against it
+    and fails the scan on a mismatch."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     return (
-        spark.read.option("header", True)
+        reader.option("header", True)
         .option("mode", "PERMISSIVE")
         .option("inferSchema", False)   # all strings: schema-on-read
         .option("multiLine", multi_line)

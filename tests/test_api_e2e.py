@@ -8,8 +8,12 @@ from __future__ import annotations
 import csv
 import glob
 import io
+import os
+import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from advanced_strapi_import_spark.api import Engine
 from fixtures_ct import COUNTRIES, REGISTRY
@@ -511,3 +515,89 @@ def test_export_page_ties_break_on_id(engine, spark, tmp_path):
     assert pages[1] == pages[8]
     got = [r["id"] for r in csv.DictReader(io.StringIO(pages[1].decode()))]
     assert got == ["2", "4", "6", "8", "10"]
+
+
+# -- remembered schemas ----------------------------------------------------
+def _inferred_schema(spark, engine, ct):
+    return spark.read.parquet(engine._path(ct)).schema
+
+
+def test_table_schema_memo_matches_inferred(engine, spark, tmp_path):
+    """The schema a table is read with equals the one Spark infers from
+    its files, nullability included, after a write, an upsert import
+    and a compaction."""
+    assert engine.table("country").schema == _inferred_schema(spark, engine, "country")
+    engine.import_csv(_csv(tmp_path, "a.csv", _HEADER + "Acme,India,2000,true\n"),
+                      "company")
+    assert engine.table("company").schema == _inferred_schema(spark, engine, "company")
+    engine.import_csv(
+        _csv(tmp_path, "b.csv", _HEADER + "Acme,China,2001,false\nNewco,USA,2020,yes\n"),
+        "company", upsert=True, upsert_field="name",
+    )
+    assert engine.table("company").schema == _inferred_schema(spark, engine, "company")
+    engine.compact_table("company")
+    assert engine.table("company").schema == _inferred_schema(spark, engine, "company")
+    assert sorted(r["name"] for r in engine.table("company").collect()) == ["Acme", "Newco"]
+
+
+def test_table_sees_rewrite_by_another_engine(engine, spark):
+    assert "extra" not in engine.table("country").columns
+    other = Engine(spark=spark, registry=REGISTRY, storage_root=engine.storage_root)
+    other.write_table("country", other.table("country").withColumn("extra", F.lit(7)))
+    df = engine.table("country")
+    assert "extra" in df.columns
+    assert {r["extra"] for r in df.collect()} == {7}
+
+
+def test_validate_sees_csv_rewritten_in_place(engine, tmp_path):
+    p = _csv(tmp_path, "c.csv", _HEADER + "Acme,India,2000,true\n")
+    assert engine.preview_csv(p, "company")["headers"] == _HEADER.strip().split(",")
+    assert engine.validate_csv(p, "company")["warnings"] == []
+    st = os.stat(p)
+    # same inode and size, new header: only the mtime tells them apart
+    with open(p, "w") as f:
+        f.write("name,country,inaugurated,active\nAcme,India,2000,true\n")
+    assert (os.stat(p).st_ino, os.stat(p).st_size) == (st.st_ino, st.st_size)
+    rep = engine.validate_csv(p, "company")
+    assert rep["warnings"] == [
+        'Column "inaugurated" does not match any field and will be ignored'
+    ]
+    assert rep["validRows"] == 1 and "established" not in rep["preview"][0]
+
+
+def test_missing_table_raises_analysis_exception(engine):
+    for _ in range(2):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            engine.table("company")
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_reads_run_no_job(engine, spark, tmp_path):
+    """Building the read frame of an unchanged table, or the scan frame
+    of a CSV already scanned, runs no Spark job; the cold builds do."""
+    group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+    cold = Engine(spark=spark, registry=REGISTRY, storage_root=engine.storage_root)
+    assert _jobs_run(spark, lambda: cold.table("country")) >= 1
+    assert _jobs_run(spark, lambda: cold.table("country")) == 0
+    assert _jobs_run(spark, lambda: engine.table("country")) == 0  # filled by its write
+
+    p = _csv(tmp_path, "c.csv", _HEADER + "Acme,India,2000,true\n")
+    assert _jobs_run(spark, lambda: engine._scan_csv(p)) >= 1
+    assert _jobs_run(spark, lambda: engine._scan_csv(p)) == 0
+    assert engine._scan_csv(p).collect() == cold._scan_csv(p).collect()
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") == group
