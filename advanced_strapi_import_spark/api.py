@@ -137,6 +137,15 @@ def prepare_batch(
     return df.localCheckpoint(eager=True)
 
 
+def _sorted(df: DataFrame, order_by: str | None) -> DataFrame:
+    """``df`` ordered by ``(order_by, id)``; as it is when ``order_by``
+    is None or not one of its columns."""
+    if not order_by or order_by not in df.columns:
+        return df
+    tie = ["id"] if "id" in df.columns and order_by != "id" else []
+    return df.orderBy(F.col(f"`{order_by}`"), *tie)
+
+
 @dataclass
 class Engine:
     spark: SparkSession
@@ -402,7 +411,22 @@ class Engine:
         order_by: str | None = None,
         stats_out: dict[str, Any] | None = None,
     ) -> DataFrame:
-        """POST /export/:ct — populate + flatten + CSV write (§3.3).
+        """POST /export/:ct — filter, page, populate + flatten, CSV write
+        (§3.3).
+
+        Like the reference's one ``filters + populate + limit`` fetch
+        (controllers/csv-import.js:339-343), the page is cut from the
+        stored table and only its rows are populated, whenever
+        ``order_by`` is None or a stored column that populating leaves
+        as it is. The page is then one partition, so the flatten runs
+        with no exchange; it is sorted again after the flatten, which
+        may reorder it. Any other ``order_by`` (a flattened name such
+        as ``country.name``) populates every filtered row, then sorts
+        and limits; a name the export does not write (a relation or
+        metadata field) sorts nothing. ``id`` breaks sort ties, so a
+        page holds the same rows whatever the partitioning. A
+        repeatable component is as wide as its longest list among the
+        rows populated, which are the exported rows on the first path.
 
         Pass ``stats_out={}`` to receive ``{"n_rows": N}`` measured by
         a CollectMetrics observation riding the write job itself — a
@@ -413,15 +437,29 @@ class Engine:
         df = self.table(ct_name)
         for k, v in (filters or {}).items():
             df = df.filter(F.col(k) == F.lit(v))
-        # row_key must uniquely identify rows, NEVER the order_by sort
-        # column: grouping the exploded FKs by a non-unique value would
-        # merge different rows' display lists into each other. Tables
-        # without an id column get a synthetic unique key for the
-        # flatten joins, dropped before the write.
-        row_key = "id"
-        if row_key not in df.columns:
-            row_key = "__xid"
-            df = df.withColumn(row_key, F.monotonically_increasing_id())
+        attr = ct.attributes.get(order_by)
+        page_first = order_by is None or (
+            order_by in df.columns
+            and not (attr and attr.type in ("relation", "media", "component"))
+            and not X.is_metadata(order_by)
+        )
+        if page_first:
+            df = _sorted(self._populate(ct, _sorted(df, order_by).limit(limit)), order_by)
+        else:
+            df = _sorted(self._populate(ct, df), order_by).limit(limit)
+        obs = None
+        if stats_out is not None:
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        X.write_csv(df, out_path)
+        if obs is not None:
+            stats_out.update(obs.get)
+        return df
+
+    def _populate(self, ct, df: DataFrame) -> DataFrame:
+        """``df`` as the export writes it: relations shown by their
+        dimension's display column, media ids joined, components
+        flattened, metadata dropped."""
         for fname, attr in ct.attributes.items():
             if attr.type != "relation" or fname not in df.columns:
                 continue
@@ -430,11 +468,9 @@ class Engine:
             tgt = self.table(attr.target)
             tct = self.registry.get(attr.target)
             if attr.is_multi_relation:
-                df = X.flatten_multi_relation(df, fname, tgt, tct, row_key=row_key)
+                df = X.flatten_multi_relation(df, fname, tgt, tct)
             else:
                 df = X.flatten_scalar_relation(df, fname, tgt, tct)
-        if row_key == "__xid":
-            df = df.drop("__xid")
         for fname, attr in ct.attributes.items():
             # media columns are array<bigint> of file ids; the CSV writer
             # rejects arrays, so export them the way multi-relations
@@ -455,21 +491,7 @@ class Engine:
                     df = X.flatten_repeatable_component(df, fname)
                 else:
                     df = X.flatten_single_component(df, fname)
-        df = X.drop_metadata(df)
-        if order_by and order_by in df.columns:
-            # id breaks ties, so a page holds the same rows whatever the
-            # partitioning
-            tie = ["id"] if "id" in df.columns and order_by != "id" else []
-            df = df.orderBy(order_by, *tie)
-        df = df.limit(limit)
-        obs = None
-        if stats_out is not None:
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        X.write_csv(df, out_path)
-        if obs is not None:
-            stats_out.update(obs.get)
-        return df
+        return X.drop_metadata(df)
 
     # -- SQL surface -----------------------------------------------------
     def sql(

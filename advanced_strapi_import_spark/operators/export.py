@@ -13,8 +13,11 @@ dot-notation columns, serialize to quoted CSV.
   - repeatable comp  -> `field.{i}.key` 1-based columns (:361-378)
   - metadata columns createdAt/updatedAt/publishedAt dropped (P10, :420-423)
 
-All flattening is select/join expressions — the populate step is a set
-of broadcast left joins, never per-row fetches.
+Every dimension is read through a broadcast left join, never per-row
+fetches. Scalar relations and components are per-row select expressions;
+a multi relation is one explode -> join -> regroup pass over the rows it
+is given, with no join back. The export verb pages first, so these run
+over the exported rows only (Engine.export_csv).
 """
 
 from __future__ import annotations
@@ -66,36 +69,51 @@ def flatten_multi_relation(
     target_ct: ContentType,
     *,
     id_col: str = "id",
-    row_key: str = "id",
 ) -> DataFrame:
     """A6: array-of-FK column -> `', '`-joined display values, order =
-    array order (the reference joins in populate order)."""
+    array order (the reference joins in populate order).
+
+    One pass: every row gets its own key, its FKs are exploded with
+    their positions and joined to the broadcast dimension, and one
+    ``groupBy(key)`` rebuilds the row, its other columns riding
+    ``first(struct)``. Nothing joins back, so rows that share an ``id``
+    keep their own lists, and a one-partition input (an export page)
+    regroups with no exchange.
+
+    A null, empty or all-null array flattens to NULL, not '': the
+    reference leaves the field unset, and the CSV writer serializes NULL
+    as an empty cell but '' as a quoted "". A row whose FKs all dangle
+    gets '' (``array_join`` skips null displays). ``id`` leads the
+    output columns, where the export has always placed it."""
     disp = first_column(target_ct)
     dim = F.broadcast(
         target.select(F.col(id_col).alias("__dim_id"), F.col(disp).cast("string").alias("__d"))
     )
-    # null/empty FK arrays must flatten to NULL, not '': the reference
-    # leaves the field unset, and the CSV writer serializes NULL as an
-    # empty cell but '' as a quoted "" — dropping the null explode rows
-    # here means such rows miss the aggregate and the final left join
-    # yields NULL
-    exploded = df.select(
-        row_key, F.posexplode_outer(field).alias("__pos", "__fk")
-    ).where(F.col("__fk").isNotNull())
-    joined = (
-        exploded.join(dim, F.col("__fk") == F.col("__dim_id"), "left")
-        .groupBy(row_key)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__d"))),
-                    lambda s: s["__d"],
-                ),
-                ", ",
-            ).alias(f"{field}.{disp}")
-        )
+    rest = sorted((c for c in df.columns if c != field), key=lambda c: c != "id")
+    # the key is its own projection: beside the generator it would be
+    # evaluated once per exploded element instead of once per row
+    keyed = df.select(
+        F.monotonically_increasing_id().alias("__rk"),
+        F.struct(*[F.col(f"`{c}`").alias(c) for c in rest]).alias("__row"),
+        F.col(f"`{field}`").alias("__fks"),
     )
-    return df.drop(field).join(joined, row_key, "left")
+    items = F.array_sort(
+        F.collect_list(F.when(F.col("__fk").isNotNull(), F.struct("__pos", "__d")))
+    )
+    regrouped = (
+        keyed.select("__rk", "__row", F.posexplode_outer("__fks").alias("__pos", "__fk"))
+        .join(dim, F.col("__fk") == F.col("__dim_id"), "left")
+        .groupBy("__rk")
+        .agg(F.first("__row").alias("__row"), items.alias("__items"))
+    )
+    shown = F.when(
+        F.size("__items") > 0,
+        F.array_join(F.transform("__items", lambda s: s["__d"]), ", "),
+    )
+    return regrouped.select(
+        *[F.col("__row").getField(c).alias(c) for c in rest],
+        shown.alias(f"{field}.{disp}"),
+    )
 
 
 def flatten_single_component(df: DataFrame, field: str) -> DataFrame:
@@ -131,10 +149,14 @@ def flatten_repeatable_component(
     return out.drop(field)
 
 
+def is_metadata(col: str) -> bool:
+    """P10 export hygiene: metadata and reserved `__*` columns are not
+    exported."""
+    return col in METADATA_COLS or col.startswith("__")
+
+
 def drop_metadata(df: DataFrame) -> DataFrame:
-    """P10 export hygiene: metadata + reserved `__*` columns."""
-    drops = [c for c in df.columns if c in METADATA_COLS or c.startswith("__")]
-    return df.drop(*drops)
+    return df.drop(*[c for c in df.columns if is_metadata(c)])
 
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True) -> None:

@@ -141,7 +141,7 @@ def export_denormalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(parts_arr), fact["id"] == parts_arr["l_orderkey"], "left"
     ).drop("l_orderkey")
     fact = X.flatten_scalar_relation(fact, "customer", cust, _CUSTOMER_DIM_CT)
-    fact = X.flatten_multi_relation(fact, "parts", part_dim, _PART_DIM_CT, row_key="id")
+    fact = X.flatten_multi_relation(fact, "parts", part_dim, _PART_DIM_CT)
     fact = fact.withColumn("parts.name", F.coalesce(F.col("`parts.name`"), F.lit("")))
     return X.drop_metadata(fact).orderBy("id").limit(1000)
 

@@ -56,6 +56,18 @@ REGISTRY = Registry.from_dict(
                     },
                 },
             },
+            "team": {
+                "uid": "api::team.team",
+                "attributes": {
+                    "id": {"type": "integer"},
+                    "name": {"type": "string", "required": True},
+                    "members": {
+                        "type": "relation",
+                        "relation": "manyToMany",
+                        "target": "country",
+                    },
+                },
+            },
         },
         "components": {
             "address": {

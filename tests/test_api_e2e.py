@@ -442,6 +442,19 @@ def test_export_multi_relation_rows_sharing_order_by_value(engine, tmp_path):
     assert got["b@x.com"] == "USA"
 
 
+def test_export_rows_sharing_id_keep_own_multi_relation(engine, tmp_path):
+    """An append import can store a second row with an existing id; each
+    row still exports its own relation list."""
+    header = "id,name,members\n"
+    engine.import_csv(_csv(tmp_path, "a.csv", header + "7,x,India\n"), "team")
+    engine.import_csv(_csv(tmp_path, "b.csv", header + "7,y,USA\n"), "team")
+    out = tmp_path / "exp"
+    engine.export_csv("team", str(out), order_by="name")
+    with open(glob.glob(str(out / "part-*.csv"))[0], newline="") as f:
+        got = [(r["id"], r["name"], r["members.name"]) for r in csv.DictReader(f)]
+    assert got == [("7", "x", "India"), ("7", "y", "USA")]
+
+
 def test_validate_absent_column_gets_default(spark):
     """A defaulted field missing from the CSV entirely must still
     materialize its default, same as a present-but-empty cell."""
