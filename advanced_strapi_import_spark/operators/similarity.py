@@ -373,7 +373,7 @@ def ivf_topk(
     dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
     if centers is None:
-        centers = _kmeans_centers(corpus, vec_col, cells, seed)
+        centers = _kmeans_centers(corpus, vec_col, cells, seed, id_col)
     centers_sq = (centers**2).sum(axis=1)  # for dist2 = |v|^2 - 2 v.C + |C|^2
 
     def _cells_fn(v, n_out, as_list):
@@ -691,10 +691,7 @@ def pq_topk(
         n[n == 0] = 1.0
         return mat / n
 
-    sample = _norm(np.array(
-        [r[0] for r in corpus.select(dbl.alias("v")).limit(8192).collect()],
-        dtype=np.float64,
-    ))
+    sample = _norm(_trainer_sample(corpus, id_col, dbl))
     dims = sample.shape[1]
     sub_d = dims // m
     rng = np.random.RandomState(seed)
@@ -1056,17 +1053,9 @@ def ivfpq_topk(
     else:
         if cells is None:
             cells = auto_cells(corpus.count())
-        sample = _unit(np.array(
-            [
-                r["v"]
-                for r in _width_ok(corpus, vec_col, dims)
-                .select(F.col(id_col).alias("i"), dbl.alias("v"))
-                .orderBy("i")
-                .limit(8192)
-                .collect()
-            ],
-            dtype=np.float64,
-        ))
+        sample = _unit(
+            _trainer_sample(_width_ok(corpus, vec_col, dims), id_col, dbl)
+        )
         centers, books = _train_ivfpq(sample, cells, m, codebook, seed)
         sub_d = sample.shape[1] // m
     c2 = (centers ** 2).sum(axis=1)
@@ -1234,17 +1223,9 @@ def build_ivfpq_index(
         n[n == 0] = 1.0
         return mat / n
 
-    sample = _unit(np.array(
-        [
-            r["v"]
-            for r in _width_ok(corpus, vec_col, dims)
-            .select(F.col(id_col).alias("i"), dbl.alias("v"))
-            .orderBy("i")
-            .limit(8192)
-            .collect()
-        ],
-        dtype=np.float64,
-    ))
+    sample = _unit(
+        _trainer_sample(_width_ok(corpus, vec_col, dims), id_col, dbl)
+    )
     centers, books = _train_ivfpq(sample, cells, m, codebook, seed)
     sub_d = sample.shape[1] // m
     c2 = (centers ** 2).sum(axis=1)
@@ -1593,17 +1574,43 @@ def ivfpq_query_index(
     return out
 
 
-def _kmeans_centers(corpus: DataFrame, vec_col: str, cells: int, seed: int):
+def _trainer_sample(corpus: DataFrame, id_col: str, vec):
+    """The ANN trainers' driver sample: the ``vec`` column of the first
+    8192 rows by ``id_col``, as a float64 matrix. The seeded k-means++
+    draws index into the sample's row order, so that order must come
+    from the data: an unordered ``limit`` takes whichever rows the
+    partitioning puts first, and the same seed then trained different
+    centers at different core counts."""
+    import numpy as np
+
+    return np.array(
+        [
+            r["v"]
+            for r in corpus.select(F.col(id_col).alias("i"), vec.alias("v"))
+            .orderBy("i")
+            .limit(8192)
+            .collect()
+        ],
+        dtype=np.float64,
+    )
+
+
+def _kmeans_centers(
+    corpus: DataFrame,
+    vec_col: str,
+    cells: int,
+    seed: int,
+    id_col: str = "vec_id",
+):
     """Seeded k-means++ / Lloyd centers on a bounded driver sample
     (same trainer as ivf_topk; at 1e9 rows you sample ~1e6 vectors —
-    the CENTERS are what must be small, not the data)."""
+    the CENTERS are what must be small, not the data). The sample is
+    the first 8192 rows by ``id_col`` (:func:`_trainer_sample`), so the
+    centers depend on the data and the seed, not the partitioning."""
     import numpy as np
 
     dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    sample = np.array(
-        [r[0] for r in corpus.select(dbl.alias("v")).limit(8192).collect()],
-        dtype=np.float64,
-    )
+    sample = _trainer_sample(corpus, id_col, dbl)
     rng = np.random.RandomState(seed)
     centers = sample[[rng.randint(len(sample))]]
     # k-means++ with an INCREMENTAL running min: only the newest
@@ -1652,7 +1659,7 @@ def build_ivf_index(
     import pandas as pd
 
     spark = corpus.sparkSession
-    centers = _kmeans_centers(corpus, vec_col, cells, seed)
+    centers = _kmeans_centers(corpus, vec_col, cells, seed, id_col)
     centers_sq = (centers**2).sum(axis=1)
     dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 

@@ -220,6 +220,42 @@ def test_ivf_precomputed_centers_match_default(spark):
     assert got == want and len(got) > 0
 
 
+def test_kmeans_centers_independent_of_partitioning(spark):
+    # the trainer sample is the first rows by id, so the seeded centers
+    # must not move when the same corpus arrives in another partition
+    # layout (fan_out repartitions to the core count)
+    import numpy as np
+
+    from advanced_strapi_import_spark.operators import similarity as S
+    from tests.conftest import SF_TEST
+
+    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
+    one = S._kmeans_centers(emb.repartition(1), "embedding", 16, 42)
+    seven = S._kmeans_centers(emb.repartition(7), "embedding", 16, 42)
+    assert one.shape == seven.shape and np.array_equal(one, seven)
+
+
+def test_pq_topk_independent_of_partitioning(spark):
+    # same rule for the PQ codebooks: the top-k must not depend on the
+    # corpus's partition layout
+    from advanced_strapi_import_spark.operators import similarity as S
+    from tests.conftest import SF_TEST
+
+    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
+    qs = emb.filter(F.col("vec_id") % 97 == 0)
+
+    def topk(corpus):
+        return sorted(
+            tuple(r)
+            for r in S.pq_topk(qs, corpus, k=5)
+            .select("query_id", "neighbor_id", "rank")
+            .collect()
+        )
+
+    one = topk(emb.repartition(1))
+    assert one and one == topk(emb.repartition(7))
+
+
 def test_lsh_index_build_and_serve(spark, tmp_path):
     """Stored LSH index: deterministic bucket function, partition-pruned
     serve, results equal a direct bucket-gated brute force."""
