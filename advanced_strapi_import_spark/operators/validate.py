@@ -24,7 +24,7 @@ carry the field message without the row prefix).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -222,10 +222,31 @@ class ValidationResult:
 
     valid: DataFrame            # casted columns, error-free rows
     invalid: DataFrame          # original columns + __errors array
-    all: DataFrame              # everything + __row + casted + __errors
+    all: DataFrame              # original columns + __row + __errors
     schema_errors: list[str] = dc_field(default_factory=list)
     warnings: list[str] = dc_field(default_factory=list)
     mapping: dict[str, HeaderMapping] = dc_field(default_factory=dict)
+    # the projection that turns an error-free row of ``all`` into a
+    # ``valid`` row; its columns name ``all``'s columns only
+    valid_cols: list[Column] = dc_field(default_factory=list)
+
+    def over(self, frame: DataFrame) -> "ValidationResult":
+        """This result re-split over ``frame``, a materialized copy of
+        ``all`` such as its local checkpoint: ``valid`` and ``invalid``
+        select from ``frame`` by column name, so nothing upstream of it
+        (the CSV scan, the row numbering, the error expressions) runs
+        again."""
+        return replace(self, all=frame, **_split(frame, self.valid_cols))
+
+
+def _split(frame: DataFrame, valid_cols: list[Column]) -> dict[str, DataFrame]:
+    """``valid``/``invalid`` of a frame carrying ``__errors``: two
+    complementary filters, the error-free side projected by
+    ``valid_cols``."""
+    return {
+        "valid": frame.filter(F.size(ERRORS_COL) == 0).select(*valid_cols),
+        "invalid": frame.filter(F.size(ERRORS_COL) > 0),
+    }
 
 
 def validate_df(
@@ -306,13 +327,13 @@ def validate_df(
     )
     out = out.withColumn(ERRORS_COL, err_array)
 
-    keep = [row_number_col] if row_number_col else []
-    valid = out.filter(F.size(ERRORS_COL) == 0).select(
+    keep = [F.col(row_number_col)] if row_number_col else []
+    valid_cols = [
         *keep,
         *[cast_cols[f].alias(f) for f in cast_cols],
         *[qcol(h).alias(dot_storage_col(m)) for h, m in mapping.items()
           if m.is_valid and m.is_dot_notation],
-    )
-    invalid = out.filter(F.size(ERRORS_COL) > 0)
-    return ValidationResult(valid=valid, invalid=invalid, all=out,
-                            schema_errors=errs, warnings=warns, mapping=mapping)
+    ]
+    return ValidationResult(all=out, schema_errors=errs, warnings=warns,
+                            mapping=mapping, valid_cols=valid_cols,
+                            **_split(out, valid_cols))

@@ -1,9 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Defaults are sized for the test harness (local[32], 128 GiB single JVM)
-but every knob is the one you would also set on a 1000-executor cluster:
-AQE for runtime re-planning + skew-join handling, auto broadcast for
-dimension joins, Arrow for the (rare) pandas-UDF paths, UTC session time.
+Defaults are sized for the host it runs on (local[N], one JVM whose heap
+is half the host's memory, at most 24g) but every knob is the one you
+would also set on a 1000-executor cluster: AQE for runtime re-planning +
+skew-join handling, auto broadcast for dimension joins, Arrow for the
+(rare) pandas-UDF paths, UTC session time.
 """
 
 from __future__ import annotations
@@ -27,6 +28,47 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
+
+MAX_HEAP_GIB = 24
+_GIB = 1024 ** 3
+# cgroup v2, then v1; v1 writes "no limit" as a huge page-aligned number
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def heap_size(meminfo: str, cgroup_limit: str | None = None) -> str:
+    """The default JVM heap: half the memory this process may use,
+    in whole GiB, at least 1g and at most 24g.
+
+    ``meminfo`` is the text of ``/proc/meminfo``; ``cgroup_limit`` the
+    text of the cgroup's memory limit file, if any ("max" or a number
+    above ``MemTotal`` means no limit)."""
+    kib = next(int(line.split()[1]) for line in meminfo.splitlines()
+               if line.startswith("MemTotal:"))
+    usable = kib * 1024
+    limit = (cgroup_limit or "").strip()
+    if limit.isdigit():
+        usable = min(usable, int(limit))
+    return f"{max(1, min(MAX_HEAP_GIB, usable // 2 // _GIB))}g"
+
+
+def host_heap_size() -> str:
+    """:func:`heap_size` of this host; reads, never writes. 24g
+    where the host has no ``/proc/meminfo``."""
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        return f"{MAX_HEAP_GIB}g"
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                return heap_size(meminfo, f.read())
+        except OSError:
+            continue
+    return heap_size(meminfo)
 
 
 def get_spark(app_name: str = "advanced-strapi-import-spark",
@@ -58,12 +100,16 @@ def get_spark(app_name: str = "advanced-strapi-import-spark",
         # pickled row-at-a-time
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local[32] puts all 32 executor threads inside the driver JVM:
-        # 8g forced full-GC pauses mid-suite (2-3x per-query timing
-        # variance); 24g on the 128 GiB harness box keeps GC off the
-        # critical path. On a real cluster this knob is per-executor
-        # memory instead (see cluster_conf).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # local[N] puts all N executor threads inside this one JVM:
+        # 8g forced full-GC pauses mid-suite at local[32] (2-3x
+        # per-query timing variance) and 24g kept GC off the critical
+        # path on a 128 GiB box, but a heap larger than the host is
+        # unsafe, so the default is half the host's (or cgroup's)
+        # memory, capped at 24g. SPARK_GRAFT_DRIVER_MEM overrides it. On
+        # a real cluster this knob is per-executor memory instead (see
+        # cluster_conf).
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_heap_size())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # the generated-class cache defaults to 100 entries; a 96-query

@@ -8,6 +8,7 @@ from __future__ import annotations
 import csv
 import glob
 import io
+import itertools
 import os
 import uuid
 
@@ -16,6 +17,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from advanced_strapi_import_spark.api import Engine
+from advanced_strapi_import_spark.schema import Registry
 from fixtures_ct import COUNTRIES, REGISTRY
 
 
@@ -614,3 +616,250 @@ def test_warm_reads_run_no_job(engine, spark, tmp_path):
     assert _jobs_run(spark, lambda: engine._scan_csv(p)) == 0
     assert engine._scan_csv(p).collect() == cold._scan_csv(p).collect()
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") == group
+
+
+# -- one validation per flow -------------------------------------------------
+# A content type with a relation (matched through a dot header) and a
+# single component, beside the fixtures' country dimension.
+SITE_REGISTRY = Registry.from_dict({
+    "contentTypes": {
+        "country": {"attributes": {
+            "id": {"type": "integer"}, "name": {"type": "string", "required": True},
+            "code": {"type": "string", "unique": True},
+        }},
+        "site": {"attributes": {
+            "id": {"type": "integer"},
+            "name": {"type": "string", "required": True},
+            "country": {"type": "relation", "relation": "manyToOne", "target": "country"},
+            "established": {"type": "integer"},
+            "location": {"type": "component", "component": "address"},
+        }},
+    },
+    "components": {"address": {"attributes": {
+        "street": {"type": "string"}, "city": {"type": "string"},
+    }}},
+})
+SITE_SCHEMA = ("id long, name string, country long, established long, "
+               "location struct<street:string, city:string>")
+SITE_SEED = [(1, "Acme", 1, 2000, ("1 Main St", "Pune")),
+             (2, "Oldco", 4, 1999, None)]
+_SITE_HEADER = "name,country.code,established,location.street,location.city\n"
+# (batch rows, import kwargs): an upsert whose keys repeat, with an
+# invalid row between two valid ones; strict mode over invalid rows with
+# a smaller cap than validate's; a file missing a required column
+FLOW_CASES = {
+    "upsert": (
+        _SITE_HEADER
+        + "Acme,CN,2001,2 Side Ave,Austin\nNewco,IN,bad,,\nAcme,US,2002,,Lima\n"
+        + "Newco,XX,2020,3 Rd,Pune\nOldco,USX,,4 Ln,\n",
+        {"upsert": True, "upsert_field": "name"},
+    ),
+    "strict": (
+        _SITE_HEADER + "Acme,CN,x,,\nNewco,IN,2020,,\nBad,IN,y,,\nWorse,,z,,\n",
+        {"strict": True, "error_cap": 2},
+    ),
+    "schema_errors": (
+        "country.code,established\nCN,2001\nIN,bad\n",
+        {"upsert": True, "upsert_field": "name"},
+    ),
+}
+
+
+def _site_engine(spark, root) -> Engine:
+    eng = Engine(spark=spark, registry=SITE_REGISTRY, storage_root=str(root))
+    eng.write_table("country", spark.createDataFrame(COUNTRIES, "id long, name string, code string"))
+    eng.write_table("site", spark.createDataFrame(SITE_SEED, SITE_SCHEMA))
+    return eng
+
+
+def _stored(engine, ct) -> list:
+    df = engine.table(ct)
+    assert not [c for c in df.columns if c.startswith("__")]
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _site_flow(spark, root, case, *, validate_first, path=None):
+    """The case's import, after a preview and a validate of the same file
+    or alone; returns the replies and the stored rows."""
+    text, kwargs = FLOW_CASES[case]
+    engine = _site_engine(spark, root)
+    p = path or _csv(root.parent, f"{root.name}.csv", text)
+    replies = {}
+    if validate_first:
+        replies["preview"] = engine.preview_csv(p, "site")
+        replies["validate"] = engine.validate_csv(p, "site")
+        assert _no_cached_relation(spark)
+        assert engine._validated is not None
+    replies["import"] = engine.import_csv(p, "site", **kwargs)
+    assert _no_cached_relation(spark)
+    assert engine._validated is None
+    return replies, _stored(engine, "site")
+
+
+@pytest.mark.parametrize("case", list(FLOW_CASES))
+def test_import_after_validate_matches_import_alone(spark, tmp_path, case):
+    """Taking the validated batch of the validate call gives the same
+    reply and the same stored rows as validating inside the import."""
+    hit, hit_rows = _site_flow(spark, tmp_path / "hit", case, validate_first=True)
+    miss, miss_rows = _site_flow(spark, tmp_path / "miss", case, validate_first=False)
+    assert hit["import"] == miss["import"]
+    assert hit_rows == miss_rows
+    if case == "upsert":
+        assert hit["import"] == {"created": 1, "updated": 2, "invalidRows": 1}
+        assert hit["validate"]["invalidRows"] == 1
+        rows = {r[1]: r for r in hit_rows}
+        assert rows["Acme"] == (1, "Acme", 2, 2002, (None, "Lima"))
+        assert rows["Newco"][2:] == (None, 2020, ("3 Rd", "Pune"))
+        assert rows["Oldco"] == (2, "Oldco", 4, 1999, ("4 Ln", None))
+    elif case == "strict":
+        assert hit_rows == sorted(SITE_SEED, key=repr)
+        assert hit["import"]["errorsTruncated"] is True
+        assert hit["validate"]["errorsTruncated"] is False
+        assert hit["import"]["errors"] == hit["validate"]["errors"][:2]
+    else:
+        assert hit_rows == sorted(SITE_SEED, key=repr)
+        assert hit["import"]["errors"][0] == 'Required field "name" is not mapped in the CSV'
+
+
+def test_import_misses_csv_rewritten_in_place(engine, tmp_path):
+    p = _csv(tmp_path, "c.csv", _HEADER + "Acme,India,2000,true\n")
+    assert engine.validate_csv(p, "company")["validRows"] == 1
+    st = os.stat(p)
+    with open(p, "w") as f:  # same inode and size, new mtime
+        f.write(_HEADER + "Bcme,China,2001,true\n")
+    assert (os.stat(p).st_ino, os.stat(p).st_size) == (st.st_ino, st.st_size)
+    assert engine.import_csv(p, "company")["created"] == 1
+    assert [(r["name"], r["country"]) for r in engine.table("company").collect()] == [
+        ("Bcme", 3)
+    ]
+
+
+def test_import_misses_edited_registry(spark, tmp_path):
+    import copy
+
+    engine = Engine(spark=spark, registry=copy.deepcopy(REGISTRY),
+                    storage_root=str(tmp_path / "store"))
+    p = _csv(tmp_path, "c.csv", _HEADER + "Acme,India,2000,true\nBelco,USA,soon,true\n")
+    assert engine.validate_csv(p, "company")["invalidRows"] == 1
+    engine.registry.get("company").attributes["established"].type = "string"
+    out = engine.import_csv(p, "company")
+    assert (out["created"], out["invalidRows"]) == (2, 0)
+    assert sorted(r["established"] for r in engine.table("company").collect()) == [
+        "2000", "soon"
+    ]
+
+
+def test_second_import_of_validated_file_validates_again(engine, spark, tmp_path):
+    p = _csv(tmp_path, "c.csv", _HEADER + "Acme,India,2000,true\nBad,India,x,true\n")
+    engine.validate_csv(p, "company")
+    first = engine.import_csv(p, "company")
+    second = engine.import_csv(p, "company")
+    assert first == second == {"created": 1, "updated": 0, "invalidRows": 1}
+    assert sorted(r["name"] for r in engine.table("company").collect()) == ["Acme", "Acme"]
+    assert _no_cached_relation(spark)
+
+
+def _sql_plans(spark, fn) -> list[str]:
+    """Physical plans of the SQL executions ``fn`` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(10_000)
+    before = store.executionsCount()
+    fn()
+    bus.waitUntilEmpty(10_000)
+    seq = store.executionsList(before, store.executionsCount() - before)
+    return [seq.apply(i).physicalPlanDescription() for i in range(seq.size())]
+
+
+def test_import_after_validate_runs_no_csv_scan(spark, tmp_path):
+    """An import of the file just validated runs no CSV scan and at least
+    two jobs fewer than one that validates the file itself; no verb
+    leaves a cached relation behind, and an import leaves no checkpoint
+    blocks."""
+    engine = _site_engine(spark, tmp_path / "store")
+    text, kwargs = FLOW_CASES["upsert"]
+    p = _csv(tmp_path, "c.csv", text)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persisted().size()
+    engine.preview_csv(p, "site")
+    assert _no_cached_relation(spark)
+    engine.validate_csv(p, "site")
+    assert _no_cached_relation(spark)
+    plans = []
+    hit = _jobs_run(spark, lambda: plans.extend(
+        _sql_plans(spark, lambda: engine.import_csv(p, "site", **kwargs))))
+    assert _no_cached_relation(spark)
+    assert plans and not [pl for pl in plans if "Scan csv" in pl]
+    miss_plans = []
+    miss = _jobs_run(spark, lambda: miss_plans.extend(
+        _sql_plans(spark, lambda: engine.import_csv(p, "site", **kwargs))))
+    assert _no_cached_relation(spark)
+    assert [pl for pl in miss_plans if "Scan csv" in pl]
+    assert hit <= miss - 2, (hit, miss)
+    assert persisted().size() <= before
+
+
+IMPORT_CONF_MATRIX = {
+    "spark.sql.shuffle.partitions": ["1", "3", "8"],
+    "spark.sql.adaptive.enabled": ["true", "false"],
+    "spark.sql.autoBroadcastJoinThreshold": [None, "-1"],  # None: as set
+    # 64 bytes splits the flow's CSV into several scan partitions
+    "spark.sql.files.maxPartitionBytes": [None, "64"],
+}
+
+
+def test_import_flow_independent_of_confs(spark, tmp_path):
+    """The preview -> validate -> import flow gives the same replies and
+    the same stored rows under every shuffle partition count, with AQE
+    on and off, with auto-broadcast off and with the CSV split into
+    several scan partitions, and the same import reply and rows as the
+    import alone."""
+    text, _ = FLOW_CASES["upsert"]
+    p = _csv(tmp_path, "flow.csv", text)
+    alone, alone_rows = _site_flow(spark, tmp_path / "alone", "upsert",
+                                   validate_first=False, path=p)
+    saved = {k: spark.conf.get(k) for k in IMPORT_CONF_MATRIX}
+    runs = {}
+    try:
+        for combo in itertools.product(*IMPORT_CONF_MATRIX.values()):
+            for k, v in zip(IMPORT_CONF_MATRIX, combo):
+                spark.conf.set(k, saved[k] if v is None else v)
+            runs[combo] = _site_flow(spark, tmp_path / f"run{len(runs)}", "upsert",
+                                     validate_first=True, path=p)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    first = next(iter(runs.values()))
+    for combo, run in runs.items():
+        assert run == first, combo
+    assert first[0]["import"] == alone["import"]
+    assert first[1] == alone_rows
+
+
+# -- swap-write --------------------------------------------------------------
+def test_write_table_interrupted_swap_keeps_previous_version(engine, spark, tmp_path,
+                                                             monkeypatch):
+    """A write that stops between its two renames leaves the previous
+    version whole: it is read back, and the next write succeeds."""
+    before = sorted(tuple(r) for r in engine.table("country").collect())
+    path = engine._path("country")
+    rename = os.rename
+
+    def second_rename_fails(src, dst):
+        if src.endswith(".__tmp__"):
+            raise OSError("interrupted swap")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", second_rename_fails)
+    with pytest.raises(OSError, match="interrupted swap"):
+        engine.write_table("country", engine.table("country").limit(1))
+    monkeypatch.undo()
+    assert not os.path.exists(path) and os.path.isdir(path + ".__old__")
+    assert engine.has_table("country")
+    assert sorted(tuple(r) for r in engine.table("country").collect()) == before
+    cold = Engine(spark=spark, registry=REGISTRY, storage_root=engine.storage_root)
+    assert sorted(tuple(r) for r in cold.table("country").collect()) == before
+
+    engine.write_table("country", engine.table("country").filter("id < 3"))
+    assert sorted(r["id"] for r in engine.table("country").collect()) == [1, 2]
+    assert sorted(os.listdir(engine.storage_root)) == ["country"]
