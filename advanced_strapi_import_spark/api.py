@@ -33,6 +33,13 @@ Each verb pays schema discovery only when its input changed: the engine
 remembers the schema of every table version it wrote or read and the
 header schema of the last CSV it scanned, and hands them to the reader,
 which then skips its footer or header job.
+
+An export shows each relation through its dimension's ``id -> display``
+lookup, built once per dimension version and display column and inlined
+in the plan as a constant (:func:`export.display_lookup`). A warm export
+is then one Spark job, its CSV write. A dimension above
+``INLINE_DIM_ROWS`` rows, or one that repeats an id, is broadcast-joined
+instead.
 """
 
 from __future__ import annotations
@@ -57,6 +64,13 @@ from advanced_strapi_import_spark.schema import Registry
 from advanced_strapi_import_spark.sources import zip_source as Z
 from advanced_strapi_import_spark.sources.csv_source import csv_scan, preview
 
+
+# A dimension of at most this many rows is inlined in the export plan as
+# a constant lookup table; a larger one is joined. A literal's cost per
+# query grows with its size (the plan and the task binary carry it): on
+# 4 CPUs the join is faster past about 6,000 rows for a 1,000-row page
+# and past about 15,000 for a 50,000-row export.
+INLINE_DIM_ROWS = 5_000
 
 # Reference file limits (/root/reference/README.md "File Limits":
 # max 10MB, CSV only; UI check admin/src/components/PluginPage.js:73-82).
@@ -232,6 +246,9 @@ class Engine:
     # the file the last validate_csv validated; the next validate_csv
     # replaces it and the next import_csv takes it, hit or miss
     _validated: _Validated | None = None
+    # dimension table path -> ((_version(path), display column), its
+    # export display lookup, None when it is joined instead)
+    _displays: dict[str, tuple[tuple, X.Lookup | None]] = field(default_factory=dict)
 
     # -- storage ---------------------------------------------------------
     def _path(self, ct_name: str) -> str:
@@ -518,17 +535,24 @@ class Engine:
         (controllers/csv-import.js:339-343), the page is cut from the
         stored table and only its rows are populated, whenever
         ``order_by`` is None or a stored column. The page is then one
-        partition, so the flatten runs with no exchange. It is sorted
-        again after the flatten, which may reorder it, on the stored
-        value carried through populate as ``__order_by``: a relation,
-        media or component field sorts by its stored ids or struct, a
-        metadata field by its value, although the export writes neither.
-        Any other ``order_by`` (a flattened name such as
-        ``country.name``) populates every filtered row, then sorts and
-        limits. ``id`` breaks sort ties, so a page holds the same rows
-        whatever the partitioning. A repeatable component is as wide as
-        its longest list among the rows populated, which are the
-        exported rows on the first path.
+        partition, so the flatten runs with no exchange. With no
+        ``order_by`` one task reads the filtered rows in scan order and
+        stops at ``limit``, so the page is the first ``limit`` of them.
+        A sorted page is sorted again after the flatten, which may
+        reorder it, on the stored value carried through populate as
+        ``__order_by``: a relation, media or component field sorts by
+        its stored ids or struct, a metadata field by its value,
+        although the export writes neither. Any other ``order_by`` (a
+        flattened name such as ``country.name``) populates every
+        filtered row, then sorts and limits; with inlined lookups that
+        populate is a projection. ``id`` breaks sort ties, so a page
+        holds the same rows whatever the partitioning. A repeatable
+        component is as wide as its longest list among the rows
+        populated, which are the exported rows on the first path.
+
+        Relations are shown through the engine's per-dimension display
+        lookups (see the module docstring), so a warm export whose
+        content type has no repeatable component runs one Spark job.
 
         Pass ``stats_out={}`` to receive ``{"n_rows": N}`` measured by
         a CollectMetrics observation riding the write job itself — a
@@ -540,7 +564,7 @@ class Engine:
         for k, v in (filters or {}).items():
             df = df.filter(F.col(k) == F.lit(v))
         if order_by is None:
-            df = self._populate(ct, df.limit(limit))
+            df = self._populate(ct, df.coalesce(1).limit(limit))
         elif order_by in df.columns:
             page = _sorted(df, order_by).limit(limit)
             page = page.withColumn(ORDER_KEY, F.col(f"`{order_by}`"))
@@ -559,19 +583,23 @@ class Engine:
 
     def _populate(self, ct, df: DataFrame) -> DataFrame:
         """``df`` as the export writes it, metadata and ``__*`` columns
-        still in: relations shown by their dimension's display column,
-        media ids joined, components flattened."""
+        still in: relations shown by their dimension's display column
+        (an inlined lookup, or a broadcast join when the dimension has
+        none), media ids joined, components flattened."""
         for fname, attr in ct.attributes.items():
             if attr.type != "relation" or fname not in df.columns:
                 continue
             if not self.has_table(attr.target):
                 continue
-            tgt = self.table(attr.target)
             tct = self.registry.get(attr.target)
-            if attr.is_multi_relation:
-                df = X.flatten_multi_relation(df, fname, tgt, tct)
+            lookup = self._display_lookup(attr.target)
+            if lookup is not None:
+                df = X.show_relation(df, fname, lookup, X.first_column(tct),
+                                     multi=attr.is_multi_relation)
+            elif attr.is_multi_relation:
+                df = X.flatten_multi_relation(df, fname, self.table(attr.target), tct)
             else:
-                df = X.flatten_scalar_relation(df, fname, tgt, tct)
+                df = X.flatten_scalar_relation(df, fname, self.table(attr.target), tct)
         for fname, attr in ct.attributes.items():
             # media columns are array<bigint> of file ids; the CSV writer
             # rejects arrays, so export them the way multi-relations
@@ -593,6 +621,19 @@ class Engine:
                 else:
                     df = X.flatten_single_component(df, fname)
         return df
+
+    def _display_lookup(self, target: str) -> X.Lookup | None:
+        """:func:`export.display_lookup` of the stored ``target``, built
+        once per table version and display column."""
+        path = self._path(target)
+        tct = self.registry.get(target)
+        key = (_version(path), X.first_column(tct))
+        known = self._displays.get(path)
+        if known and known[0] == key:
+            return known[1]
+        lookup = X.display_lookup(self.table(target), tct, max_rows=INLINE_DIM_ROWS)
+        self._displays[path] = (key, lookup)
+        return lookup
 
     # -- SQL surface -----------------------------------------------------
     def sql(

@@ -13,16 +13,23 @@ dot-notation columns, serialize to quoted CSV.
   - repeatable comp  -> `field.{i}.key` 1-based columns (:361-378)
   - metadata columns createdAt/updatedAt/publishedAt dropped (P10, :420-423)
 
-Every dimension is read through a broadcast left join, never per-row
-fetches. Scalar relations and components are per-row select expressions;
-a multi relation is one explode -> join -> regroup pass over the rows it
-is given, with no join back. The export verb pages first, so these run
-over the exported rows only (Engine.export_csv).
+A relation is shown through its dimension's ``id -> display`` lookup.
+:func:`display_lookup` collects a small dimension once and inlines it in
+the plan as a constant hash table, so :func:`show_relation` is one
+projection: no join, no explode, no regroup and no broadcast job. A
+dimension too large to inline, or one whose ids repeat, is read through
+a broadcast left join instead (:func:`flatten_scalar_relation`,
+:func:`flatten_multi_relation`). Components are per-row select
+expressions. The export verb pages first, so all of these run over the
+exported rows only (Engine.export_csv).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import json
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from advanced_strapi_import_spark.schema import ContentType
 
@@ -37,6 +44,67 @@ def first_column(target_ct: ContentType) -> str:
     # itself a non-id attribute and therefore already names[0]'s list.)
     names = [n for n in target_ct.attributes if n != "id"]
     return names[0] if names else "id"
+
+
+# an FK column -> its display value, NULL when the FK is null or dangles
+Lookup = Callable[[Column], Column]
+
+
+def display_lookup(target: DataFrame, target_ct: ContentType, *, max_rows: int) -> Lookup | None:
+    """The ``id -> display`` lookup of a dimension of at most
+    ``max_rows`` rows, as an expression over a constant hash table; None
+    when the dimension has more rows or repeats an id (a join would show
+    such an FK once per matching row).
+
+    One job collects at most ``max_rows + 1`` rows of ``(id, display)``.
+    Row ``(i, d)`` goes to bucket ``i % n`` of ``n = row count`` buckets,
+    and the buckets travel as one JSON literal that Catalyst folds into
+    a constant. A lookup reads one bucket and filters it on the id.
+    ``try_element_at`` keeps every miss NULL under ANSI mode."""
+    disp = first_column(target_ct)
+    rows = (
+        target.select(
+            F.col("id").cast("long").alias("i"), F.col(disp).cast("string").alias("d")
+        )
+        .where(F.col("i").isNotNull())
+        .limit(max_rows + 1)
+        .collect()
+    )
+    n = len(rows)
+    if n > max_rows or len({r["i"] for r in rows}) < n:
+        return None
+    if n == 0:
+        return lambda fk: F.lit(None).cast("string")
+    buckets: list[list[dict]] = [[] for _ in range(n)]
+    for r in rows:
+        buckets[r["i"] % n].append({"i": r["i"], "d": r["d"]})  # Python % is pmod
+    table = F.from_json(F.lit(json.dumps(buckets)), "array<array<struct<i:bigint,d:string>>>")
+
+    def lookup(fk: Column) -> Column:
+        bucket = F.try_element_at(table, (F.pmod(fk, F.lit(n)) + 1).cast("int"))
+        return F.try_element_at(F.filter(bucket, lambda e: e["i"] == fk), F.lit(1))["d"]
+
+    return lookup
+
+
+def show_relation(
+    df: DataFrame, field: str, lookup: Lookup, disp: str, *, multi: bool
+) -> DataFrame:
+    """Replace the FK column ``field`` with `` field.<disp> `` in one
+    projection, with the columns and NULL rules of
+    :func:`flatten_scalar_relation` (display last) and
+    :func:`flatten_multi_relation` (``id`` first, display last)."""
+    fk = F.col(f"`{field}`")
+    rest = [c for c in df.columns if c != field]
+    if multi:
+        rest.sort(key=lambda c: c != "id")
+        shown = F.when(
+            F.exists(fk, lambda x: x.isNotNull()),
+            F.array_join(F.transform(fk, lookup), ", "),
+        )
+    else:
+        shown = lookup(fk)
+    return df.select(*[F.col(f"`{c}`") for c in rest], shown.alias(f"{field}.{disp}"))
 
 
 def flatten_scalar_relation(

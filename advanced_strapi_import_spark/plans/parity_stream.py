@@ -2392,7 +2392,10 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _time.time()
     for i in range(3):
-        part = globmod.glob(f"{w}/__w={i}/part-*.parquet")[0]
+        parts = globmod.glob(f"{w}/__w={i}/part-*.parquet")
+        if not parts:
+            continue  # an empty slice (all ts equal) carries no events
+        part = parts[0]
         # flat file name: the file source orders triggers by mtime, so
         # PIN strictly increasing mtimes (000..002) — the one-pass
         # write copies all three back-to-back, and same-millisecond

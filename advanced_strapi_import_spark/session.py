@@ -81,9 +81,9 @@ def get_spark(app_name: str = "advanced-strapi-import-spark",
     to the core count so tests don't pay 200-partition scheduling tax.
 
     ``extra_conf`` lets a harness layer context-start-only knobs on top
-    (no in-repo caller passes it today — bench.py's periodicGC=1min
-    experiment used it and was reverted as a measured net loss); it has
-    no effect when an existing session is fetched.
+    (perfbench passes its local and warehouse directories and driver
+    JVM options this way); it has no effect when an existing session is
+    fetched.
     """
     n = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -42,16 +42,11 @@ _ENTRY_SCHEMA = T.StructType(
 
 
 def zip_entries(
-    spark: SparkSession, path: str, *, include_content: bool = False,
-    skip_corrupt: bool = False,
+    spark: SparkSession, path: str, *, include_content: bool = False
 ) -> DataFrame:
     """S8: one row per non-directory zip entry across all archives in
-    ``path`` (glob ok).
-
-    ``skip_corrupt=True`` drops unreadable archives instead of failing
-    the job — the production default for fleet-scale ingest where one
-    bad archive must not kill a 100 TB run (corrupt paths surface as a
-    row with name='__CORRUPT__' so callers can side-channel them)."""
+    ``path`` (glob ok). An unreadable archive fails the job with
+    ``zipfile.BadZipFile``: uploads are outside input."""
 
     def unzip(batches) -> Iterator:
         import io
@@ -63,19 +58,7 @@ def zip_entries(
             out = {k: [] for k in
                    ("zip_path", "entry_path", "name", "folder", "size", "content")}
             for zp, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    zf_ctx = zipfile.ZipFile(io.BytesIO(content))
-                except zipfile.BadZipFile:
-                    if skip_corrupt:
-                        out["zip_path"].append(zp)
-                        out["entry_path"].append("")
-                        out["name"].append("__CORRUPT__")
-                        out["folder"].append("")
-                        out["size"].append(0)
-                        out["content"].append(None)
-                        continue
-                    raise
-                with zf_ctx as zf:
+                with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for info in zf.infolist():
                         if info.is_dir():
                             continue

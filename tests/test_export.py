@@ -9,6 +9,7 @@ filtered row, then sorting by ``(order_by, id)`` and limiting.
 
 from __future__ import annotations
 
+import copy
 import csv
 import io
 import itertools
@@ -17,9 +18,11 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from advanced_strapi_import_spark import api
 from advanced_strapi_import_spark.api import Engine
 from advanced_strapi_import_spark.operators import export as X
 from advanced_strapi_import_spark.schema import Registry
+from test_api_e2e import _jobs_run
 
 REG = Registry.from_dict({
     "contentTypes": {
@@ -268,15 +271,115 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _join_engine(engine, monkeypatch) -> Engine:
+    """A fresh engine on ``engine``'s store to which every dimension is
+    too large to inline, so it shows relations through the broadcast
+    join."""
+    monkeypatch.setattr(api, "INLINE_DIM_ROWS", 0)
+    return Engine(spark=engine.spark, registry=REG, storage_root=engine.storage_root)
+
+
 @pytest.mark.parametrize("order_by", ["name", "id", None])
-def test_page_first_plan_has_no_hash_exchange(page_engine, tmp_path, order_by):
-    """A page cut before populating is one partition: the broadcast joins
-    and the multi-relation regroup run with no hash exchange."""
-    df = page_engine.export_csv("item", str(tmp_path / "page"), filters=PAGE_FILTER,
-                                limit=PAGE_LIMIT, order_by=order_by)
+def test_page_first_plan_has_no_hash_exchange(page_engine, tmp_path, monkeypatch, order_by):
+    """A page cut before populating shows its relations by one projection
+    over the inlined lookups: no join, no generator, no hash exchange,
+    and the lookup literal is folded, not parsed per row. A dimension too
+    large to inline is broadcast-joined, still with no hash exchange."""
+    kw = dict(filters=PAGE_FILTER, limit=PAGE_LIMIT, order_by=order_by)
+    df = page_engine.export_csv("item", str(tmp_path / "page"), **kw)
     plan = _executed_plan(df)
+    for op in ("Join", "Generate", "Exchange hashpartitioning"):
+        assert op not in plan, plan
+    qe = df._jdf.queryExecution()
+    assert "from_json" in qe.analyzed().toString()
+    assert "from_json" not in qe.optimizedPlan().toString()
+
+    joined = _join_engine(page_engine, monkeypatch)
+    plan = _executed_plan(joined.export_csv("item", str(tmp_path / "joined"), **kw))
     assert "Exchange hashpartitioning" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize("order_by", [None, "name", "id", "country.name"])
+def test_inline_lookup_matches_join(engine, tmp_path, monkeypatch, order_by):
+    """The inlined lookups write the same CSV bytes as the broadcast
+    joins, over the fixture's null, empty, all-null and dangling FKs and
+    its NULL display value."""
+    engine.export_csv("item", str(tmp_path / "inline"), limit=100, order_by=order_by)
+    assert all(v[1] is not None for v in engine._displays.values())
+    joined = _join_engine(engine, monkeypatch)
+    joined.export_csv("item", str(tmp_path / "joined"), limit=100, order_by=order_by)
+    assert joined._displays and all(v[1] is None for v in joined._displays.values())
+    got, want = _csv_bytes(tmp_path / "inline"), _csv_bytes(tmp_path / "joined")
+    if order_by is None:
+        # the join path's multi-relation regroup does not keep row order
+        head, *rows = got.splitlines()
+        want_head, *want_rows = want.splitlines()
+        assert head == want_head and sorted(rows) == sorted(want_rows)
+    else:
+        assert got == want
+
+
+def test_empty_dimension_matches_join(engine, spark, tmp_path, monkeypatch):
+    """An empty dimension inlines a lookup that always misses: every tag
+    FK dangles, as on the join path."""
+    engine.write_table("tag", spark.createDataFrame([], "id long, label string"))
+    df = engine.export_csv("item", str(tmp_path / "inline"), limit=100, order_by="id")
+    assert engine._displays[engine._path("tag")][1] is not None
+    assert [r["tags.label"] for r in df.collect()] == [
+        "", None, None, None, "", "", "", ""]
+    joined = _join_engine(engine, monkeypatch)
+    joined.export_csv("item", str(tmp_path / "joined"), limit=100, order_by="id")
+    assert _csv_bytes(tmp_path / "inline") == _csv_bytes(tmp_path / "joined")
+
+
+def test_dimension_with_repeated_id_is_joined(engine, spark, tmp_path):
+    """A dimension that repeats an id is not inlined: the join shows the
+    FK once per matching row, as the export always has."""
+    engine.write_table("country", spark.createDataFrame(
+        COUNTRIES + [(1, "Bharat", "BH")], "id long, name string, code string"))
+    df = engine.export_csv("item", str(tmp_path / "out"), limit=100, order_by="id")
+    assert engine._displays[engine._path("country")][1] is None
+    assert engine._displays[engine._path("tag")][1] is not None
+    got = [(r["id"], r["country.name"], r["langs.name"]) for r in df.collect()]
+    assert sorted(got, key=repr) == [
+        (1, "Bharat", "Chile, Bharat, India"), (1, "India", "Chile, Bharat, India"),
+        (2, None, None), (3, None, None), (4, "Chile", ""),
+        (5, "Peru", "Chile, Chile"), (6, None, "Peru"),
+        (7, "Bharat", "Bharat, India"), (7, "India", "Bharat, India"),
+        (8, "Chile", None),
+    ]
+
+
+def test_new_dimension_version_changes_display(engine, spark, tmp_path):
+    engine.export_csv("item", str(tmp_path / "v1"), limit=100, order_by="id")
+    engine.write_table("tag", spark.createDataFrame(
+        [(1, "rot"), (2, "grün"), (3, "blau")], "id long, label string"))
+    df = engine.export_csv("item", str(tmp_path / "v2"), limit=100, order_by="id")
+    assert [r["tags.label"] for r in df.collect()] == [
+        "rot, grün", None, None, None, "blau, rot", "rot, rot, grün", "", "grün"]
+
+
+def test_registry_edit_changes_display_column(engine, tmp_path):
+    engine.export_csv("item", str(tmp_path / "v1"), limit=100, order_by="id")
+    reg = copy.deepcopy(REG)
+    country = reg.get("country")
+    country.attributes = {k: country.attributes[k] for k in ("id", "code", "name")}
+    engine.registry = reg
+    df = engine.export_csv("item", str(tmp_path / "v2"), limit=100, order_by="id")
+    assert "country.code" in df.columns and "country.name" not in df.columns
+    assert [r["country.code"] for r in df.collect()] == [
+        "IN", None, None, "CL", "PE", None, "IN", "CL"]
+    assert "langs.code" in df.columns
+
+
+@pytest.mark.parametrize("kw", [dict(limit=100), dict(filters=PAGE_FILTER, order_by="name")],
+                         ids=["unsorted", "filtered_page"])
+def test_warm_export_runs_one_job(page_engine, spark, tmp_path, kw):
+    """Once the lookups are built, an export is its CSV write alone."""
+    page_engine.export_csv("item", str(tmp_path / "cold"), **kw)
+    assert _jobs_run(spark, lambda: page_engine.export_csv(
+        "item", str(tmp_path / "warm"), **kw)) == 1
 
 
 CONF_MATRIX = {
@@ -286,7 +389,7 @@ CONF_MATRIX = {
 }
 
 
-@pytest.mark.parametrize("order_by", ["name", "country.name"])
+@pytest.mark.parametrize("order_by", ["name", "country.name", None])
 def test_page_bytes_independent_of_confs(page_engine, spark, tmp_path, order_by):
     """The ordered page's CSV bytes are the same under every shuffle
     partition count, with AQE on and off and with auto-broadcast off."""

@@ -41,6 +41,25 @@ def test_zip_entries_and_hygiene(spark, tmp_path):
     assert names == {"CH001.pdf", "CH001_01.pdf", "CH002_lab.pdf", "loose_invoice_CH003.pdf"}
 
 
+def test_ingest_media_zip_rejects_corrupt_archive(spark, tmp_path):
+    """An archive that is not a zip fails the upload; no entry of it is
+    routed."""
+    import pytest
+
+    from advanced_strapi_import_spark.api import Engine
+    from advanced_strapi_import_spark.schema import Registry
+
+    reg = Registry.from_dict({"contentTypes": {"challan": {"attributes": {
+        "challan_no": {"type": "string"}, "reports": {"type": "media"},
+    }}}, "components": {}})
+    eng = Engine(spark=spark, registry=reg, storage_root=str(tmp_path / "store"))
+    bad = tmp_path / "media.zip"
+    bad.write_bytes(b"PK\x03\x04 not really a zip archive")
+    with pytest.raises(Exception, match="BadZipFile"):
+        eng.ingest_media_zip(str(bad), "challan", "challan_no")
+    assert eng._media == {}
+
+
 def test_media_files_routing(spark, tmp_path):
     path = _make_zip(
         tmp_path,

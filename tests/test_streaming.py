@@ -329,6 +329,31 @@ def test_transition_matrix_stream_cross_batch_carry(spark, tmp_path):
     }
 
 
+def test_transition_matrix_stream_all_timestamps_equal(spark, tmp_path):
+    """Every event at one instant: all rows fall in the first time
+    slice, the two empty slices are skipped, and the drained matrix
+    equals the batch window's."""
+    import datetime
+
+    import advanced_strapi_import_spark.plans.all  # noqa: F401
+    from advanced_strapi_import_spark.plans.registry import QUERIES
+
+    t = datetime.datetime(2024, 1, 1, 10)
+    rows = [(1, 1, "view"), (2, 1, "click"), (3, 2, "signup"),
+            (4, 2, "purchase"), (5, 1, "purchase"), (6, 3, "view")]
+    spark.createDataFrame(
+        [(eid, t, uid, typ, 1.0, "{}") for eid, uid, typ in rows],
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string",
+    ).write.parquet(f"{tmp_path}/events.parquet")
+    got = QUERIES["stream_transition_matrix"].fn(spark, str(tmp_path)).collect()
+    want = QUERIES["events_transition_matrix"].fn(spark, str(tmp_path)).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert {(r["prev_type"], r["next_type"]): r["n"] for r in got} == {
+        ("view", "click"): 1, ("click", "purchase"): 1, ("signup", "purchase"): 1,
+    }
+
+
 def test_hdr_quantile_stream_merges_across_batches(spark, tmp_path):
     """Round-10 HDR quantile serving: per-batch histograms must MERGE
     — a per-batch-only quantile would answer from the last slice. Two
